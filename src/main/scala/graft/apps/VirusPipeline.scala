@@ -2,6 +2,7 @@ package graft.apps
 
 import graft.export.Hierarchy
 import graft.io.{ApiLogReader, Codecs}
+import graft.ml.MlPipeline
 import graft.operators.FeatureSelection
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -91,7 +92,7 @@ object VirusPipeline {
     // L1 setRuns parity: the reference trains with `setRuns(10)`
     // (`KmeansVirus.scala:183-186`) — best-of-`runs` seeded fits
     // keeping min WSSSE is the Spark 2+ equivalent
-    val model = graft.ml.MlPipeline.bestOfKMeans(samples, k, runs,
+    val model = MlPipeline.bestOfKMeans(samples, k, runs,
       baseSeed = seed)
     // P9: api leaf {name, size} with size = totalFeatures − 0-based rank
     // (`KmeansVirus.scala:106-111`)
@@ -175,36 +176,18 @@ object VirusPipeline {
     * optimizer — modern LinearSVC/OWLQN does not reproduce that
     * artifact (it converges to a usable margin even at reg=10), which
     * is exactly why both routes ship (SURVEY §2.8; ml04 vs ml10).
+    * The grid runs as ONE batched sweep (`MlPipeline.sgdSweep`): one
+    * data pass per SGD iteration for all points and one scoring pass
+    * for all AUCs, at most 10 + 10 jobs whatever the grid size
+    * (MlSweepSpec pins the equivalence with `SVMWithSGD.run` and
+    * `BinaryClassificationMetrics`, and the job count).
     * VirusPipelineSpec asserts the published bands on this report. */
   def sgdReport(spark: SparkSession, samples: DataFrame,
                 seed: Long = 42L): DataFrame = {
-    import org.apache.spark.mllib.classification.SVMWithSGD
-    import org.apache.spark.mllib.evaluation.BinaryClassificationMetrics
-    import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
-    import org.apache.spark.mllib.optimization.SquaredL2Updater
-    import org.apache.spark.mllib.regression.LabeledPoint
-    val Array(train0, _, test0) = samples.select("label", "features")
-      .randomSplit(Array(0.5, 0.25, 0.25), seed)
-    def toRdd(df: DataFrame) = df.rdd.map { r =>
-      LabeledPoint(r.getDouble(0), OldVectors.fromML(
-        r.getAs[org.apache.spark.ml.linalg.Vector](1)))
-    }
-    val train = toRdd(train0).coalesce(8).cache()
-    val test = toRdd(test0).coalesce(8).cache()
-    train.count(); test.count()
-    val rows = Seq(0.001, 0.01, 0.1, 1.0, 10.0).map { reg =>
-      val svm = new SVMWithSGD()
-      svm.optimizer.setNumIterations(10).setStepSize(1.0)
-        .setRegParam(reg).setUpdater(new SquaredL2Updater)
-      val m = svm.run(train)
-      m.clearThreshold()
-      val auc = new BinaryClassificationMetrics(
-        test.map(p => (m.predict(p.features), p.label))).areaUnderROC()
-      (reg, auc)
-    }
-    train.unpersist(false); test.unpersist(false)
+    val rows = MlPipeline.sgdSplitSweep(samples, seed)
+      .map(p => (p.regParam, p.auc))
     import spark.implicits._
-    rows.toDF("reg_param", "auc").orderBy("reg_param")
+    rows.sortBy(_._1).toDF("reg_param", "auc") // driver-side: no sort job
   }
 
   /** Writes the reference's four file artifacts. */

@@ -28,8 +28,11 @@ import org.apache.spark.sql.functions._
 object Funcs {
 
   /** API/token normalization, reference `FeatureSelectionCloud.scala:333-337`
-    * (`replace(" ","").replace("+","").replace("-","")`). */
-  def normalizeToken(c: Column): Column = regexp_replace(c, "[ +-]", "")
+    * (`replace(" ","").replace("+","").replace("-","")`). `translate`
+    * with an empty replacement deletes the three characters without a
+    * per-row regex; PropertiesSpec holds it equal to
+    * `regexp_replace(c, "[ +-]", "")`. */
+  def normalizeToken(c: Column): Column = translate(c, " +-", "")
 
   /** Whitespace tokenizer for `documents.text`; empty tokens dropped
     * (reference P2, `FeatureSelectionCloud.scala:337`). */

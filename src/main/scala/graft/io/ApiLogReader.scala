@@ -34,7 +34,9 @@ object ApiLogReader {
         // sample_id keeps the class directory: the same basename exists
         // in BOTH class dirs, so basename alone would merge two samples.
         // input_file_name() is URI-encoded → decode for readable ids.
-        url_decode(regexp_extract(input_file_name(), "([^/]+/[^/]+)$", 1))
+        // The last two path segments, without a per-row regex
+        // (PropertiesSpec: equal to regexp_extract "([^/]+/[^/]+)$").
+        url_decode(substring_index(input_file_name(), "/", -2))
           .as("sample_id"),
         when(input_file_name().contains("virus_LOGS_CONVERTED"), "virus")
           .otherwise("clean").as("cls"),

@@ -1,10 +1,17 @@
 package graft.ml
 
+import breeze.linalg.{DenseVector => BDV}
 import graft.Tables._
+import org.apache.spark.Partitioner
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, LogisticRegression}
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.mllib.classification.SVMModel
+import org.apache.spark.mllib.linalg.{Vector => OldVector, Vectors => OldVectors}
+import org.apache.spark.mllib.optimization.{HingeGradient, SquaredL2Updater}
+import org.apache.spark.mllib.regression.LabeledPoint
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,7 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * Differences from the reference, by necessity (SURVEY §6 caveats):
   * `KMeans.setRuns` is gone in Spark 2+ (single seeded run);
-  * `SVMWithSGD` is gone (LinearSVC/OWLQN is the same model family);
+  * `SVMWithSGD` survives only in RDD mllib, so its math is reproduced
+  * by the batched [[sgdSweep]] (ml10) beside LinearSVC/OWLQN (ml04);
   * every stochastic step is seeded (the reference seeded nothing, so
   * its published AUCs are one unreproducible draw).
   *
@@ -85,6 +93,146 @@ object MlPipeline {
     data.unpersist(false)
     import s.implicits._
     rows.toDF("k", "training_cost").orderBy("k")
+  }
+
+  /** The reference's SVM regularization grid (`SVMDT.scala:204-214`). */
+  val SgdRegParams: Seq[Double] = Seq(0.001, 0.01, 0.1, 1.0, 10.0)
+
+  /** One point of [[sgdSweep]]: the fitted weights (no intercept), the
+    * SGD iterations it ran, and its exact ROC AUC on the test split. */
+  final case class SgdPoint(regParam: Double, weights: OldVector,
+      iterations: Int, auc: Double)
+
+  /** L5 with the reference's exact optimizer, batched: the
+    * `SVMWithSGD.trainWithParams` fit (`SVMDT.scala:204-214`: zero
+    * initial weights, step size 1.0, 10 iterations,
+    * miniBatchFraction 1.0, HingeGradient, SquaredL2Updater, no
+    * intercept) for every `regParams` point at once. Each SGD
+    * iteration is ONE broadcast of the still-active weight vectors and
+    * ONE `treeAggregate` that adds every active model's
+    * `HingeGradient.compute` into its own buffer; each model then takes
+    * its own `SquaredL2Updater` step and GradientDescent's convergence
+    * rule (‖Δw‖ < 0.001·max(‖w‖, 1) from the second iteration on) — a
+    * converged model leaves the later passes. One more pass scores
+    * every model on `test` ([[rankAucs]]: one job for all AUCs instead
+    * of a `BinaryClassificationMetrics` per model). Jobs: one for the
+    * training stats (count, dimension and SVMWithSGD's 0/1 label
+    * check, done once), ≤ 10 for the iterations, one for scoring —
+    * whatever the grid size. MlSweepSpec holds the fits
+    * and AUCs to `SVMWithSGD.run` and `areaUnderROC` within 1e-12.
+    * `train` should be cached; `test` is read once. */
+  def sgdSweep(train: RDD[LabeledPoint], test: RDD[LabeledPoint],
+      regParams: Seq[Double]): Seq[SgdPoint] = {
+    require(regParams.nonEmpty, "sgdSweep needs at least one regParam")
+    val (m, badLabels, n) = train.treeAggregate((0L, 0L, 0))(
+      (c, p) => (c._1 + 1,
+        if (p.label == 0.0 || p.label == 1.0) c._2 else c._2 + 1,
+        p.features.size),
+      (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)))
+    require(m > 0, "sgdSweep needs a non-empty training split")
+    require(badLabels == 0, s"SVM labels must be 0 or 1: $badLabels are not")
+    val gradient = new HingeGradient
+    val updater = new SquaredL2Updater
+    val weights = Array.fill(regParams.size)(OldVectors.zeros(n))
+    val iterations = Array.fill(regParams.size)(0)
+    var active = regParams.indices.toArray
+    var i = 1
+    while (active.nonEmpty && i <= 10) {
+      val bcW = train.sparkContext.broadcast(active.map(weights))
+      val sums = train.treeAggregate(Array.ofDim[Double](active.length, n))(
+        (g, p) => {
+          val w = bcW.value
+          var j = 0
+          while (j < w.length) {
+            gradient.compute(p.features, p.label, w(j), OldVectors.dense(g(j)))
+            j += 1
+          }
+          g
+        },
+        (a, b) => {
+          for (j <- a.indices; k <- 0 until n) a(j)(k) += b(j)(k)
+          a
+        })
+      bcW.destroy()
+      active = active.zip(sums).filterNot { case (j, sum) =>
+        // GradientDescent's own arithmetic: breeze's element-wise mean
+        val grad = OldVectors.dense((new BDV(sum) / m.toDouble).data)
+        val w = updater.compute(weights(j), grad, 1.0, i, regParams(j))._1
+        val converged = i > 1 && { // GradientDescent.isConverged
+          var d2 = 0.0; var w2 = 0.0; var k = 0
+          while (k < n) {
+            val dk = weights(j)(k) - w(k); d2 += dk * dk; w2 += w(k) * w(k)
+            k += 1
+          }
+          math.sqrt(d2) < 0.001 * math.max(math.sqrt(w2), 1.0)
+        }
+        weights(j) = w; iterations(j) = i
+        converged
+      }.map(_._1)
+      i += 1
+    }
+    val aucs = rankAucs(test,
+      weights.map(w => new SVMModel(w, 0.0).clearThreshold()))
+    regParams.indices.map(j =>
+      SgdPoint(regParams(j), weights(j), iterations(j), aucs(j)))
+  }
+
+  /** Every model's exact ROC AUC on `test` from one pass: the scores go
+    * to one partition per model, sorted, and each partition reduces to
+    * ml15's tie-averaged rank statistic, U = Σ_s n_pos(s)·(neg_below(s)
+    * + ½·n_neg(s)), kept as the integer 2U. A one-class or empty split
+    * gets `BinaryClassificationMetrics`' ROC conventions: no negatives
+    * → 1.0, no positives → 0.0, neither → 0.5. */
+  private def rankAucs(test: RDD[LabeledPoint],
+      models: Array[SVMModel]): Seq[Double] = {
+    val bcM = test.sparkContext.broadcast(models)
+    val nModels = models.length
+    val byModel = new Partitioner {
+      def numPartitions: Int = nModels
+      def getPartition(key: Any): Int = key.asInstanceOf[(Int, Double)]._1
+    }
+    implicit val byModelThenScore: Ordering[(Int, Double)] =
+      Ordering.Tuple2(Ordering.Int, Ordering.Double.TotalOrdering)
+    val counts = test.flatMap { p =>
+      val ms = bcM.value
+      ms.indices.map(j => ((j, ms(j).predict(p.features)), p.label > 0.5))
+    }.repartitionAndSortWithinPartitions(byModel).mapPartitions { it =>
+      val rows = it.buffered
+      var np = 0L; var nn = 0L; var twoU = 0L
+      while (rows.hasNext) {
+        val s = rows.head._1._2
+        var gp = 0L; var gn = 0L
+        while (rows.hasNext &&
+            java.lang.Double.compare(rows.head._1._2, s) == 0) {
+          if (rows.next()._2) gp += 1 else gn += 1
+        }
+        twoU += gp * (2 * nn + gn); np += gp; nn += gn
+      }
+      Iterator.single((np, nn, twoU))
+    }.collect() // partition order = model order
+    bcM.destroy()
+    counts.toSeq.map { case (np, nn, twoU) =>
+      if (nn == 0) { if (np == 0) 0.5 else 1.0 }
+      else if (np == 0) 0.0
+      else twoU / 2.0 / (np * nn).toDouble
+    }
+  }
+
+  /** `trainWithParams` on a (label, features) frame (`SVMDT.scala:
+    * 92-95,204-214`): the seeded 50/25/25 split, [[sgdSweep]] on the
+    * train split (8 partitions, cached) and scored on the test split.
+    * Shared by `VirusPipeline.sgdReport` and ml10. */
+  def sgdSplitSweep(data: DataFrame, seed: Long,
+      regParams: Seq[Double] = SgdRegParams): Seq[SgdPoint] = {
+    val Array(train0, _, test0) = data.select("label", "features")
+      .randomSplit(Array(0.5, 0.25, 0.25), seed)
+    def toRdd(df: DataFrame) = df.rdd.map { r =>
+      LabeledPoint(r.getDouble(0), OldVectors.fromML(
+        r.getAs[org.apache.spark.ml.linalg.Vector](1)))
+    }
+    val train = toRdd(train0).coalesce(8).cache()
+    try sgdSweep(train, toRdd(test0), regParams)
+    finally train.unpersist(false)
   }
 
   /** (label, features) — binary label: embeddings.label < 5, mirroring
@@ -258,43 +406,20 @@ object MlPipeline {
       rows.toDF("impurity", "max_depth", "auc").orderBy("impurity", "max_depth")
     }),
 
-    // ml10: L5 with the reference's EXACT optimizer — `SVMWithSGD`
-    // (10 SGD iterations, step 1.0, SquaredL2Updater, regParam sweep,
-    // `trainWithParams` `SVMDT.scala:204-214`) still ships in Spark 4's
-    // RDD mllib, so the "LinearSVC is a different optimizer" caveat in
-    // SURVEY §2.8 is closed by running both: ml04 is the modern
-    // spark.ml route, ml10 the byte-faithful SGD route. Deterministic:
-    // zero-init weights, miniBatchFraction=1.0, fixed sampling seed
-    // inside GradientDescent, fixed 8-partition layout.
+    // ml10: L5 with the reference's EXACT optimizer — `SVMWithSGD`'s
+    // math (10 SGD iterations, step 1.0, SquaredL2Updater, regParam
+    // sweep, `trainWithParams` `SVMDT.scala:204-214`) through the
+    // batched `sgdSweep`, so the "LinearSVC is a different optimizer"
+    // caveat in SURVEY §2.8 is closed by running both: ml04 is the
+    // modern spark.ml route, ml10 the byte-faithful SGD route (held to
+    // `SVMWithSGD.run` and `BinaryClassificationMetrics` by
+    // MlSweepSpec). Deterministic: zero-init weights,
+    // miniBatchFraction=1.0, fixed 8-partition train layout.
     "ml10_svm_sgd" -> ((s, d) => {
-      import org.apache.spark.mllib.classification.SVMWithSGD
-      import org.apache.spark.mllib.evaluation.BinaryClassificationMetrics
-      import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
-      import org.apache.spark.mllib.optimization.SquaredL2Updater
-      import org.apache.spark.mllib.regression.LabeledPoint
-      val Array(train0, _, test0) =
-        labeled(s, d).randomSplit(Array(0.5, 0.25, 0.25), Seed)
-      def toRdd(df: DataFrame) = df.rdd.map { r =>
-        LabeledPoint(r.getDouble(0), OldVectors.fromML(
-          r.getAs[org.apache.spark.ml.linalg.Vector](1)))
-      }
-      val train = toRdd(train0).coalesce(8).cache()
-      val test = toRdd(test0).coalesce(8).cache()
-      train.count(); test.count()
-      val rows = inParallel(Seq(0.001, 0.01, 0.1, 1.0, 10.0)) { reg =>
-        val svm = new SVMWithSGD()
-        svm.optimizer.setNumIterations(10).setStepSize(1.0)
-          .setRegParam(reg).setUpdater(new SquaredL2Updater)
-        val m = svm.run(train)
-        m.clearThreshold() // raw margins, like the reference's AUC path
-        val scoreAndLabels = test.map(p => (m.predict(p.features), p.label))
-        val auc = new BinaryClassificationMetrics(scoreAndLabels)
-          .areaUnderROC()
-        (reg, math.round(auc * 1e4) / 1e4)
-      }
-      train.unpersist(false); test.unpersist(false)
+      val rows = sgdSplitSweep(labeled(s, d), Seed)
+        .map(p => (p.regParam, math.round(p.auc * 1e4) / 1e4))
       import s.implicits._
-      rows.toDF("reg_param", "auc").orderBy("reg_param")
+      rows.sortBy(_._1).toDF("reg_param", "auc") // driver-side: no sort job
     }),
 
     // ml04: L5+L7+L8 — linear classifier sweep over L2 regularization

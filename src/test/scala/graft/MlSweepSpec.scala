@@ -1,14 +1,165 @@
 package graft
 
+import graft.ml.MlPipeline
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.mllib.classification.SVMWithSGD
+import org.apache.spark.mllib.evaluation.BinaryClassificationMetrics
+import org.apache.spark.mllib.linalg.{Vector => OldVector, Vectors => OldVectors}
+import org.apache.spark.mllib.optimization.SquaredL2Updater
+import org.apache.spark.mllib.regression.LabeledPoint
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** L1 parity harnesses: `setRuns` emulation (best-of-N seeded fits)
+/** ML sweep harnesses: L1 `setRuns` emulation (best-of-N seeded fits)
   * and the range-parameterized k-sweep (reference sweeps 5..100 by 5,
-  * `KmeansVirus.scala:165-173`). */
+  * `KmeansVirus.scala:165-173`); L5's batched SGD sweep against the
+  * sequential `SVMWithSGD` + `BinaryClassificationMetrics` route it
+  * replaced, which lives on here only as the oracle. */
 class MlSweepSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** The sequential route: one `SVMWithSGD` fit with the
+    * `trainWithParams` settings and one `areaUnderROC` per regParam. */
+  private def sequential(train: RDD[LabeledPoint], test: RDD[LabeledPoint],
+      reg: Double): (OldVector, Double) = {
+    val svm = new SVMWithSGD()
+    svm.optimizer.setNumIterations(10).setStepSize(1.0)
+      .setRegParam(reg).setUpdater(new SquaredL2Updater)
+    val m = svm.run(train)
+    m.clearThreshold()
+    (m.weights, new BinaryClassificationMetrics(
+      test.map(p => (m.predict(p.features), p.label))).areaUnderROC())
+  }
+
+  /** Every sweep point equals its sequential fit: weights within 1e-12
+    * (relative where a weight exceeds 1: reg=10 diverges to large
+    * weights) and AUC within 1e-12. */
+  private def assertSequential(train: RDD[LabeledPoint],
+      test: RDD[LabeledPoint], regs: Seq[Double]): Seq[MlPipeline.SgdPoint] = {
+    val got = MlPipeline.sgdSweep(train, test, regs)
+    assert(got.map(_.regParam) == regs)
+    got.foreach { p =>
+      val (w, auc) = sequential(train, test, p.regParam)
+      assert(p.weights.size == w.size)
+      for (k <- 0 until w.size)
+        assert(math.abs(p.weights(k) - w(k)) <= 1e-12 * math.max(1.0, math.abs(w(k))),
+          s"reg ${p.regParam} weight $k: ${p.weights(k)} vs ${w(k)}")
+      assert(math.abs(p.auc - auc) <= 1e-12,
+        s"reg ${p.regParam} AUC: ${p.auc} vs $auc")
+    }
+    got
+  }
+
+  private def toPoints(df: org.apache.spark.sql.DataFrame): RDD[LabeledPoint] =
+    df.rdd.map(r => LabeledPoint(r.getDouble(0),
+      OldVectors.fromML(r.getAs[org.apache.spark.ml.linalg.Vector](1))))
+
+  /** ml10's input: sf0.001 embeddings, label < 5 → 1.0, split 50/25/25. */
+  private def embeddingSplits(): (RDD[LabeledPoint], RDD[LabeledPoint]) = {
+    val labeled = Tables.embeddings(spark, "/root/testdata/sf0.001").select(
+      when(col("label") < 5, 1.0).otherwise(0.0).as("label"),
+      array_to_vector(col("embedding")).as("features"))
+    val Array(train0, _, test0) =
+      labeled.randomSplit(Array(0.5, 0.25, 0.25), 42L)
+    (toPoints(train0).coalesce(8).cache(), toPoints(test0).cache())
+  }
+
+  /** Two separable classes with a margin of ~100 after one step: every
+    * hinge term is zero from iteration 2 on, so small regParams stop at
+    * iteration 2 while large ones run all 10. */
+  private def separable(n: Int, seed: Long): RDD[LabeledPoint] = {
+    val rnd = new scala.util.Random(seed)
+    spark.sparkContext.parallelize((0 until n).map { i =>
+      val y = (i % 2).toDouble
+      LabeledPoint(y, OldVectors.sparse(4,
+        Array(0, 1 + rnd.nextInt(3)),
+        Array(if (y == 1.0) 10.0 else -10.0, rnd.nextGaussian())))
+    }, 3)
+  }
+
+  test("sgdSweep equals sequential SVMWithSGD on ml10's sf0.001 input") {
+    val (train, test) = embeddingSplits()
+    assertSequential(train, test, MlPipeline.SgdRegParams)
+    train.unpersist(false); test.unpersist(false)
+  }
+
+  test("sgdSweep drops converged models and still equals SVMWithSGD") {
+    val train = separable(60, 1L).cache()
+    val test = separable(30, 2L)
+    val got = assertSequential(train, test, Seq(0.0, 1e-4, 1.0, 10.0))
+    val iters = got.map(p => p.regParam -> p.iterations).toMap
+    assert(iters(0.0) == 2 && iters(1e-4) == 2,
+      s"small regParams must converge at iteration 2: $iters")
+    assert(iters(10.0) == 10, s"reg 10 must run every iteration: $iters")
+    train.unpersist(false)
+  }
+
+  test("sgdSweep AUC on one-class and empty test splits pins the sequential route") {
+    val (train, test) = embeddingSplits()
+    val regs = Seq(0.01, 10.0)
+    val positives = assertSequential(train, test.filter(_.label == 1.0), regs)
+    val negatives = assertSequential(train, test.filter(_.label == 0.0), regs)
+    val empty = assertSequential(train, test.filter(_ => false), regs)
+    // BinaryClassificationMetrics' ROC conventions: with no negatives
+    // the curve runs along FPR = 0, with no positives along TPR = 0,
+    // and with neither it is the diagonal
+    assert(positives.forall(_.auc == 1.0), positives)
+    assert(negatives.forall(_.auc == 0.0), negatives)
+    assert(empty.forall(_.auc == 0.5), empty)
+    train.unpersist(false); test.unpersist(false)
+  }
+
+  test("ml10 rows are unchanged by the batched sweep") {
+    // recorded from the sequential route (one SVMWithSGD fit and one
+    // BinaryClassificationMetrics per regParam) on the same data;
+    // ml10 has no DuckDB oracle, so this pins its rows instead
+    val got = SparkEntry.queries("ml10_svm_sgd")(spark, "/root/testdata/sf0.001")
+      .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    assert(got == Seq((0.001, 0.4506), (0.01, 0.4506), (0.1, 0.4506),
+      (1.0, 0.4506), (10.0, 0.5494)))
+  }
+
+  test("sgdReport runs at most 10 iterations + 10 jobs for any grid size") {
+    val samples = Tables.embeddings(spark, "/root/testdata/sf0.001").select(
+      (col("label") % 2).cast("double").as("label"),
+      array_to_vector(col("embedding")).as("features"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // the listener bus is asynchronous and private to Spark: wait for
+    // it to deliver every posted event before reading the count
+    def quiesce(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+        .invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(10000L))
+      ()
+    }
+    def jobsOf(f: => Int): (Int, Int) = {
+      quiesce(); jobs.set(0)
+      val n = f
+      quiesce()
+      (n, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (rows, reportJobs) =
+        jobsOf(apps.VirusPipeline.sgdReport(spark, samples).collect().length)
+      assert(rows == MlPipeline.SgdRegParams.size)
+      assert(reportJobs <= 10 + 10, s"sgdReport ran $reportJobs jobs")
+      // sgdReport's sweep with a grid over twice as large: same bound
+      val regs = (1 to 12).map(_ * 0.25)
+      val (points, wideJobs) =
+        jobsOf(MlPipeline.sgdSplitSweep(samples, 42L, regs).size)
+      assert(points == regs.size)
+      assert(wideJobs <= 10 + 10, s"12 regParams ran $wideJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("bestOfKMeans cost is non-increasing in runs (setRuns parity)") {
     val data = Tables.embeddings(spark, "/root/testdata/sf0.001")

@@ -118,6 +118,44 @@ class PropertiesSpec extends AnyFunSuite {
     })
   }
 
+  // ASCII, the three stripped characters, and multi-byte code points
+  // (2-, 3- and 4-byte UTF-8, the last a surrogate pair in Java)
+  private val mixedChar = Gen.frequency(
+    4 -> Gen.alphaNumChar.map(_.toString),
+    3 -> Gen.oneOf(" ", "+", "-"),
+    1 -> Gen.oneOf("é", "ß", "中", "😀", "\t", "_", "%"))
+  private def strOf(part: Gen[String]) =
+    Gen.listOf(part).map(_.take(24).mkString)
+
+  test("normalizeToken's translate equals the regexp_replace it replaced") {
+    runProp(Prop.forAll(Gen.listOf(strOf(mixedChar))) { xs =>
+      val ss = (None +: xs.map(Some(_))).toDF("x")
+      ss.select(Funcs.normalizeToken(col("x")).as("got"),
+          regexp_replace(col("x"), "[ +-]", "").as("want"))
+        .collect().forall(r => r.get(0) == r.get(1))
+    })
+  }
+
+  test("readRaw's substring_index equals the regexp_extract it replaced") {
+    // the domain is input_file_name(): an absolute URI of a file (at
+    // least two non-empty segments, possibly spaces or %-escapes), or
+    // "" when the scan has no file name
+    val segment = strOf(Gen.frequency(
+      6 -> mixedChar.suchThat(_ != "%"),
+      1 -> Gen.oneOf("%20", "%25", "%2F", "%E4%B8%AD")))
+      .suchThat(_.nonEmpty)
+    val path = for {
+      scheme <- Gen.oneOf("file://", "hdfs://nn:8020", "s3a://bucket", "")
+      segs <- Gen.chooseNum(2, 6).flatMap(Gen.listOfN(_, segment))
+    } yield segs.mkString(s"$scheme/", "/", "")
+    runProp(Prop.forAll(Gen.listOf(path)) { ps =>
+      ("" +: ps).toDF("p")
+        .select(substring_index(col("p"), "/", -2).as("got"),
+          regexp_extract(col("p"), "([^/]+/[^/]+)$", 1).as("want"))
+        .collect().forall(r => r.get(0) == r.get(1))
+    })
+  }
+
   test("mm03 video container round-trips every frame for any geometry") {
     import graft.multimodal.Multimodal
     val gen = for {
