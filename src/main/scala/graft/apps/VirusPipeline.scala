@@ -84,14 +84,13 @@ object VirusPipeline {
     stageDone("s1_features")
 
     // stage 2 — clustering (KmeansVirus): sparse vectors per sample
+    // cached for the fit and the assignments below; the fit's first
+    // job (its instance count) fills the cache
     val samples = assemble(vec, nFeatures).cache()
-    // materialize BEFORE the concurrent fits (kmeansCostSweep's
-    // discipline): otherwise all `runs` threads race to fill the same
-    // cache partitions and serialize on the block locks
-    samples.count()
     // L1 setRuns parity: the reference trains with `setRuns(10)`
-    // (`KmeansVirus.scala:183-186`) — best-of-`runs` seeded fits
-    // keeping min WSSSE is the Spark 2+ equivalent
+    // (`KmeansVirus.scala:183-186`) — the best of `runs` seeded fits by
+    // min WSSSE, all fitted together in shared passes as Spark 1.x's
+    // runs were
     val model = MlPipeline.bestOfKMeans(samples, k, runs,
       baseSeed = seed)
     // P9: api leaf {name, size} with size = totalFeatures − 0-based rank

@@ -4,7 +4,7 @@ import breeze.linalg.{DenseVector => BDV}
 import graft.Tables._
 import org.apache.spark.Partitioner
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, LogisticRegression}
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel, KMeansRuns}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.mllib.classification.SVMModel
@@ -20,11 +20,14 @@ import org.apache.spark.sql.functions._
   * bound to the `embeddings` table.
   *
   * Differences from the reference, by necessity (SURVEY §6 caveats):
-  * `KMeans.setRuns` is gone in Spark 2+ (single seeded run);
-  * `SVMWithSGD` survives only in RDD mllib, so its math is reproduced
-  * by the batched [[sgdSweep]] (ml10) beside LinearSVC/OWLQN (ml04);
-  * every stochastic step is seeded (the reference seeded nothing, so
-  * its published AUCs are one unreproducible draw).
+  * `KMeans.setRuns` is gone in Spark 2+, so the best-of-N fit
+  * ([[bestOfKMeans]]) and the k-sweep ([[kmeansCostSweep]]) go through
+  * `KMeansRuns`, which fits every (k, seed) run in shared passes as
+  * Spark 1.x's `runs` did; `SVMWithSGD` survives only in RDD mllib, so
+  * its math is reproduced by the batched [[sgdSweep]] (ml10) beside
+  * LinearSVC/OWLQN (ml04); every stochastic step is seeded (the
+  * reference seeded nothing, so its published AUCs are one
+  * unreproducible draw).
   *
   * These queries have no DuckDB oracle (iterative ML is not
   * SQL-expressible) — the driver records a rows-only check.
@@ -32,10 +35,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: k-means/DT/SVC in spark.ml are already
   * data-distributed (per-iteration map + treeAggregate); feature
   * assembly here is one per-row `array_to_vector`, no shuffle. The
-  * hyperparameter sweeps fit sequentially like the reference's
-  * (`SVMDT.scala:151,189`) — at cluster scale you would dispatch the
-  * grid points concurrently from the driver, but each fit is itself
-  * distributed so the shape stays valid.
+  * k-means runs and the SGD regularization grid are batched: one data
+  * pass per iteration serves every run. The DT and LinearSVC grids
+  * dispatch their fits concurrently from the driver ([[inParallel]]),
+  * each fit itself distributed.
   */
 object MlPipeline {
 
@@ -61,36 +64,34 @@ object MlPipeline {
   }
 
   /** L1 `setRuns=10` parity (`KmeansVirus.scala:183-186`): Spark 2+
-    * removed multi-run k-means, so best-of-N independently seeded fits
-    * keeping the minimum training cost (WSSSE) reproduces the
-    * semantics. The N fits run concurrently — each is itself a
-    * distributed job, so on a cluster this fills executors the same
-    * way the old `setRuns` parallel runs did. Deterministic: seeds are
-    * baseSeed..baseSeed+runs-1 and the min is unique per cost (ties
-    * broken by first = lowest seed). */
+    * removed multi-run k-means, so the best of N seeded fits, by
+    * minimum training cost (WSSSE), reproduces the semantics. The N
+    * fits share their passes as Spark 1.x's runs did (`KMeansRuns`):
+    * one data pass per k-means|| step and per Lloyd iteration serves
+    * every seed, so a fit runs at most 1 + 1 + 2·2 + 1 + 20 jobs
+    * whatever N. Each seed's model is the one spark.ml's row solver
+    * fits with tol 1e-6 (KMeansRunsSpec holds them to it). Deterministic:
+    * seeds are baseSeed..baseSeed+runs-1 and ties on cost go to the
+    * lowest seed. */
   def bestOfKMeans(data: DataFrame, k: Int, runs: Int,
       baseSeed: Long = Seed, featuresCol: String = "features"): KMeansModel = {
     require(runs >= 1, s"runs must be >= 1, got $runs")
-    inParallel(0L until runs.toLong) { i =>
-      new KMeans().setK(k).setTol(1e-6).setSeed(baseSeed + i)
-        .setFeaturesCol(featuresCol).fit(data)
-    }.minBy(_.summary.trainingCost)
+    KMeansRuns.fit(data, featuresCol,
+      (0 until runs).map(i => (k, baseSeed + i)))
+      .minBy(_.summary.trainingCost)
   }
 
   /** L1 k-sweep over an arbitrary range (the reference sweeps 5..100
     * by 5 in `KmeansVirus.scala:165-173` and 30..160 by 10 in
-    * `SVMDT.scala:240-247`), scored by training cost (WSSSE). The
-    * bench query ml05 keeps a small default range; callers pass the
-    * full reference ranges. */
+    * `SVMDT.scala:240-247`), scored by training cost (WSSSE). Every k
+    * is one run of the same batched fit as [[bestOfKMeans]], so the
+    * whole grid shares each pass. The bench query ml05 keeps a small
+    * default range; callers pass the full reference ranges. */
   def kmeansCostSweep(s: SparkSession, d: String, ks: Seq[Int]): DataFrame = {
     val data = embeddings(s, d)
-      .select(array_to_vector(col("embedding")).as("features")).cache()
-    data.count() // materialize before concurrent fits
-    val rows = inParallel(ks) { k =>
-      val m = new KMeans().setK(k).setTol(1e-6).setSeed(Seed).fit(data)
-      (k, math.round(m.summary.trainingCost * 1e4) / 1e4)
-    }
-    data.unpersist(false)
+      .select(array_to_vector(col("embedding")).as("features"))
+    val rows = KMeansRuns.fit(data, "features", ks.map(k => (k, Seed)))
+      .map(m => (m.getK, math.round(m.summary.trainingCost * 1e4) / 1e4))
     import s.implicits._
     rows.toDF("k", "training_cost").orderBy("k")
   }
@@ -306,7 +307,6 @@ object MlPipeline {
       val data = embeddings(s, d)
         .select(array_to_vector(col("embedding")).as("features"))
         .coalesce(8).cache()
-      data.count()
       val rows = Seq(1, 4).map { runs =>
         val m = bestOfKMeans(data, k = 10, runs = runs)
         (runs, math.round(m.summary.trainingCost * 1e4) / 1e4)

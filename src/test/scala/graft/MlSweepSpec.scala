@@ -8,12 +8,12 @@ import org.apache.spark.mllib.linalg.{Vector => OldVector, Vectors => OldVectors
 import org.apache.spark.mllib.optimization.SquaredL2Updater
 import org.apache.spark.mllib.regression.LabeledPoint
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ML sweep harnesses: L1 `setRuns` emulation (best-of-N seeded fits)
-  * and the range-parameterized k-sweep (reference sweeps 5..100 by 5,
+/** ML sweep harnesses: L1 `setRuns` emulation (best-of-N seeded fits,
+  * held to spark.ml's own fits in KMeansRunsSpec) and the
+  * range-parameterized k-sweep (reference sweeps 5..100 by 5,
   * `KmeansVirus.scala:165-173`); L5's batched SGD sweep against the
   * sequential `SVMWithSGD` + `BinaryClassificationMetrics` route it
   * replaced, which lives on here only as the oracle. */
@@ -125,40 +125,16 @@ class MlSweepSpec extends AnyFunSuite {
     val samples = Tables.embeddings(spark, "/root/testdata/sf0.001").select(
       (col("label") % 2).cast("double").as("label"),
       array_to_vector(col("embedding")).as("features"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    // the listener bus is asynchronous and private to Spark: wait for
-    // it to deliver every posted event before reading the count
-    def quiesce(): Unit = {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      ()
-    }
-    def jobsOf(f: => Int): (Int, Int) = {
-      quiesce(); jobs.set(0)
-      val n = f
-      quiesce()
-      (n, jobs.get)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (rows, reportJobs) =
-        jobsOf(apps.VirusPipeline.sgdReport(spark, samples).collect().length)
-      assert(rows == MlPipeline.SgdRegParams.size)
-      assert(reportJobs <= 10 + 10, s"sgdReport ran $reportJobs jobs")
-      // sgdReport's sweep with a grid over twice as large: same bound
-      val regs = (1 to 12).map(_ * 0.25)
-      val (points, wideJobs) =
-        jobsOf(MlPipeline.sgdSplitSweep(samples, 42L, regs).size)
-      assert(points == regs.size)
-      assert(wideJobs <= 10 + 10, s"12 regParams ran $wideJobs jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, reportJobs) = JobCount.of(spark)(
+      apps.VirusPipeline.sgdReport(spark, samples).collect().length)
+    assert(rows == MlPipeline.SgdRegParams.size)
+    assert(reportJobs <= 10 + 10, s"sgdReport ran $reportJobs jobs")
+    // sgdReport's sweep with a grid over twice as large: same bound
+    val regs = (1 to 12).map(_ * 0.25)
+    val (points, wideJobs) = JobCount.of(spark)(
+      MlPipeline.sgdSplitSweep(samples, 42L, regs).size)
+    assert(points == regs.size)
+    assert(wideJobs <= 10 + 10, s"12 regParams ran $wideJobs jobs")
   }
 
   test("bestOfKMeans cost is non-increasing in runs (setRuns parity)") {
@@ -174,6 +150,13 @@ class MlSweepSpec extends AnyFunSuite {
     // deterministic: same call, same model
     val again = graft.ml.MlPipeline.bestOfKMeans(data, k = 8, runs = 4)
     assert(again.summary.trainingCost == best.summary.trainingCost)
+    // the paper's runs=10: seeds {42..51} ⊇ {42..45}, and again
+    // deterministic down to the centers
+    val best10 = graft.ml.MlPipeline.bestOfKMeans(data, k = 8, runs = 10)
+    assert(best10.summary.trainingCost <= best.summary.trainingCost)
+    val again10 = graft.ml.MlPipeline.bestOfKMeans(data, k = 8, runs = 10)
+    assert(again10.summary.trainingCost == best10.summary.trainingCost)
+    assert(again10.clusterCenters.toSeq == best10.clusterCenters.toSeq)
     data.unpersist(false)
   }
 
