@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Shared column-expression helpers.
   *
-  * Everything here is a pure Catalyst expression tree (no Scala UDFs),
+  * Everything here except the driver-side [[weightedEntropy]] is a
+  * pure Catalyst expression tree (no Scala UDFs),
   * so it stays inside whole-stage codegen and is usable at 100 TB
   * scale. Each helper is designed to be *cross-engine deterministic*:
   * the DuckDB oracle SQL in `SparkEntry.oracleSql` computes the exact
@@ -92,6 +93,24 @@ object Funcs {
       .withColumn("term", -p * log(p))
       .groupBy("cluster")
       .agg(sum("n").as("n_total"), sum("term").as("entropy_raw"))
+  }
+
+  /** The cluster-size-weighted average of [[clusterEntropy]] over a
+    * collected `(cluster, n)` counts table, one entry per (cluster,
+    * label), computed on the driver: Σ n_total·entropy_raw / Σ n_total
+    * with the same per-term math (`StrictMath.log` is the function
+    * Spark's `log` evaluates). Equal to the Spark form up to the
+    * summation order; NaN for an empty table. */
+  def weightedEntropy[K](counts: Iterable[(K, Long)]): Double = {
+    val byCluster = counts.groupMap(_._1)(_._2).values
+    val weighted = byCluster.map { ns =>
+      val tot = ns.sum
+      val h = ns.map { n =>
+        val p = n.toDouble / tot; -p * StrictMath.log(p)
+      }.sum
+      tot * h
+    }.sum
+    weighted / byCluster.map(_.sum).sum
   }
 
   /** DuckDB SQL of the in-order dot product (shared by the dedup and

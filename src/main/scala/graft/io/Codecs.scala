@@ -3,42 +3,51 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text codecs for the reference's file artifacts, kept as pure
   * row→line functions so byte compatibility is testable (SURVEY §1.3).
   *
   * The writers collect to the driver on purpose: these artifacts are
-  * small by construction (ranked features ≤ topN rows; reports), and
-  * the reference's sinks are driver-side writers too (K1-K3,
-  * `FeatureSelectionCloud.scala:147-180`, `KmeansVirus.scala:128-136`).
-  * Anything large (the LIBSVM matrix at scale) can go through
-  * `df.write.text` instead — the line-format columns are built
-  * distributed either way.
+  * small by construction (ranked features ≤ topN rows; one row per
+  * sample), and the reference's sinks are driver-side writers too
+  * (K1-K3, `FeatureSelectionCloud.scala:147-180`,
+  * `KmeansVirus.scala:128-136`). They also sort on the driver, in
+  * Spark's own orders (strings by UTF-8 bytes, doubles by
+  * `SQLOrderingUtil`), so each writer is one collect and no sort job;
+  * over the pipeline's local frames it is no job at all. Anything
+  * large (the LIBSVM matrix at scale) can go through `df.write.text`
+  * instead — the line-format columns are Spark expressions either way.
   */
 object Codecs {
+
+  /** Spark's ascending string order: UTF-8 bytes, which differs from
+    * `String.compareTo`'s UTF-16 units around supplementary
+    * characters. */
+  val sqlStringOrder: Ordering[String] = (a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  private def writeLines(lines: Seq[String], path: String): Unit =
+    Files.write(Paths.get(path),
+      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
 
   /** K1: `(token,gain)` tuple lines, descending rank — byte format of
     * `topFeatures.txt` (`FeatureSelectionCloud.scala:147-158`). Uses
     * driver-side Double.toString for exact Java formatting. */
-  def writeTopFeatures(top: DataFrame, path: String): Unit = {
-    val lines = top.orderBy("feature_index")
-      .select("token", "info_gain").collect()
-      .map(r => s"(${r.getString(0)},${r.getDouble(1)})")
-    Files.write(Paths.get(path),
-      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-  }
+  def writeTopFeatures(top: DataFrame, path: String): Unit =
+    writeLines(top.select("feature_index", "token", "info_gain").collect()
+      .sortBy(_.getInt(0))
+      .map(r => s"(${r.getString(1)},${r.getDouble(2)})").toSeq, path)
 
   /** K2: LIBSVM lines (already formatted by
     * `FeatureSelection.libsvmRows`), one file. Sorted by sample for
     * determinism (the reference inherited listing order). */
-  def writeLibSvm(rows: DataFrame, path: String): Unit = {
-    val lines = rows.orderBy("sample_id").select("libsvm_row")
-      .collect().map(_.getString(0))
-    Files.write(Paths.get(path),
-      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-  }
+  def writeLibSvm(rows: DataFrame, path: String): Unit =
+    writeLines(rows.select("sample_id", "libsvm_row").collect()
+      .sortBy(_.getString(0))(sqlStringOrder).map(_.getString(1)).toSeq, path)
 
   /** S3-equivalent: parse LIBSVM text back to long form
     * `(row_id, label, indices ARRAY<INT>)`. The loader's 0-based shift
@@ -96,15 +105,17 @@ object Codecs {
             a.getField("name"), a.getField("size"))), ","),
         lit("]")).as("line"))
 
+  /** K3: [[outputTxtLines]] in (cluster, label, line) order. */
   def writeOutputTxt(assignments: DataFrame, path: String): Unit = {
-    val lines = outputTxtLines(assignments)
-      .orderBy("cluster", "label", "line").select("line")
-      .collect().map(_.getString(0))
-    Files.write(Paths.get(path),
-      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val order = Ordering.by[Row, Int](_.getInt(0))
+      .orElse(Ordering.by[Row, Double](_.getDouble(1))(
+        SQLOrderingUtil.compareDoubles(_, _)))
+      .orElse(Ordering.by[Row, String](_.getString(2))(sqlStringOrder))
+    writeLines(outputTxtLines(assignments).collect().sorted(order)
+      .map(_.getString(2)).toSeq, path)
   }
 
-  /** K5: the D3 hierarchy JSON (single row from `Hierarchy.d3Json`). */
+  /** K5: the D3 hierarchy JSON (single row holding `Hierarchy.d3Json`). */
   def writeJson(json: DataFrame, path: String): Unit =
     Files.write(Paths.get(path),
       json.collect()(0).getString(0).getBytes(StandardCharsets.UTF_8))

@@ -37,6 +37,33 @@ class FuncsSpec extends AnyFunSuite {
       lit(0.0))) == 0.0)
   }
 
+  test("weightedEntropy equals clusterEntropy's weighted average") {
+    // 40 random (cluster, label) count tables, each 1-12 clusters of
+    // 1-3 labels (single-label clusters included: their entropy is 0),
+    // checked in ONE Spark query: the cluster key carries the table
+    val rnd = new scala.util.Random(7)
+    val tables = (0 until 40).map { _ =>
+      (0 until 1 + rnd.nextInt(12)).flatMap { c =>
+        (0 until 1 + rnd.nextInt(3)).map(l =>
+          (c, l, 1L + rnd.nextInt(if (rnd.nextBoolean()) 5 else 5000)))
+      }
+    }
+    assert(tables.exists(_.groupBy(_._1).values.exists(_.size == 1)))
+    val counts = tables.zipWithIndex.flatMap { case (t, i) =>
+      t.map { case (c, _, n) => (i * 1000 + c, n) }
+    }.toDF("cluster", "n")
+    val viaSpark = clusterEntropy(counts)
+      .groupBy(($"cluster" / 1000).cast("int").as("table"))
+      .agg(sum($"n_total" * $"entropy_raw") / sum($"n_total"))
+      .as[(Int, Double)].collect().toMap
+    tables.zipWithIndex.foreach { case (t, i) =>
+      val driver = weightedEntropy(t.map { case (c, _, n) => (c, n) })
+      assert(math.abs(driver - viaSpark(i)) <= 1e-12 * math.abs(viaSpark(i)),
+        s"table $i: driver $driver vs spark ${viaSpark(i)}")
+    }
+    assert(weightedEntropy(Seq((0, 4L), (1, 9L))) == 0.0)
+  }
+
   test("fingerprint is the left-to-right polynomial hash") {
     // "ab" -> ((0*31+97)%p)*31+98 = 3105
     assert(eval1(fingerprint(lit("ab"))) == 3105L)

@@ -17,7 +17,7 @@ class HierarchySpec extends AnyFunSuite {
       .withColumn("apis", expr(
         "transform(raw, x -> struct(x._1 AS name, x._2 AS size))"))
       .drop("raw")
-    val json = Hierarchy.d3Json(assignments).as[String].collect()(0)
+    val json = Hierarchy.d3Json(assignments.collect().toSeq)
     assert(json.contains(""""name":"Main Container""""))
     assert(json.contains(""""name":"Cluster #0""""))
     assert(json.contains(""""name":"Cluster #1""""))

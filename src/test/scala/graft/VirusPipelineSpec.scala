@@ -48,6 +48,26 @@ class VirusPipelineSpec extends AnyFunSuite {
     assert(score >= 0.0 && score <= math.log(2))
   }
 
+  test("run + writeArtifacts + entropyScore stay within their job counts") {
+    // a private copy of the fixture: no plan cached by another test
+    // serves it, so every job runs
+    val copy = TestFiles.copyOf(TestFiles.tinyApiLogs).toString
+    val out = java.nio.file.Files.createTempDirectory("graft_vpjobs_").toString
+    val (a, runJobs) = JobCount.of(spark)(
+      VirusPipeline.run(spark, copy, topN = 10, k = 2))
+    val (_, writeJobs) = JobCount.of(spark)(
+      VirusPipeline.writeArtifacts(a, out))
+    val (_, entropyJobs) = JobCount.of(spark)(
+      VirusPipeline.entropyScore(a.assignments))
+    // the writers collect top and the LIBSVM rows; output.txt and
+    // data.json render from local frames
+    assert(writeJobs <= 3, s"writeArtifacts ran $writeJobs jobs")
+    assert(entropyJobs <= 2, s"entropyScore ran $entropyJobs jobs")
+    val total = runJobs + writeJobs + entropyJobs
+    assert(total <= 29, s"run $runJobs + write $writeJobs + " +
+      s"entropy $entropyJobs = $total jobs")
+  }
+
   test("LIBSVM codec round-trips") {
     import spark.implicits._
     val lines = Seq("1 2:1 5:1", "0 1:1").toDS()
