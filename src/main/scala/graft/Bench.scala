@@ -246,16 +246,17 @@ object Bench {
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
     // spark.ml warm-up: the first MLlib fit of a cold JVM pays ~3-6 s
     // of class-loading + BLAS + codegen that belongs to the JVM, not
-    // the query — a throwaway 100-row fit absorbs it so the ml*
-    // queries (alphabetically mid-run) measure steady-state
+    // the query — a throwaway 100-row fit through the k-means path the
+    // ml* queries use absorbs it, so they (alphabetically mid-run)
+    // measure steady-state
     locally {
-      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.clustering.KMeansRuns
       import org.apache.spark.ml.functions.array_to_vector
       import org.apache.spark.sql.functions._
       val tiny = spark.range(100)
         .select(array_to_vector(array(rand(1).cast("float"),
           rand(2).cast("float"))).as("features"))
-      new KMeans().setK(2).setSeed(1L).fit(tiny)
+      KMeansRuns.fit(tiny, "features", Seq((2, 1L)))
     }
     // optional comma-separated query filter for single-query iteration
     // (perf work shouldn't pay the full 100+-query suite per probe)

@@ -33,10 +33,10 @@ import org.apache.spark.sql.types._
   */
 object VirusPipeline {
 
-  /** `assignments`, `clusterReport` and `json` are local frames;
-    * `top` and `vectors` are cached. */
+  /** `assignments` and `clusterReport` are local frames, `json` is the
+    * rendered `data.json`; `top` and `vectors` are cached. */
   final case class Artifacts(top: DataFrame, vectors: DataFrame,
-      assignments: DataFrame, clusterReport: DataFrame, json: DataFrame)
+      assignments: DataFrame, clusterReport: DataFrame, json: String)
 
   private val assignmentSchema = StructType(Seq(
     StructField("cluster", IntegerType),
@@ -142,8 +142,7 @@ object VirusPipeline {
       .toSeq.sortBy(_._1).map { case ((cluster, label), n) =>
         Row(s"Cluster $cluster contains $n $label files", cluster, label)
       }
-    val json = local(spark, Seq(Row(Hierarchy.d3Json(rows))),
-      StructType(Seq(StructField("json", StringType))))
+    val json = Hierarchy.d3Json(rows)
     stageDone("s2_cluster")
 
     Artifacts(top, vec, local(spark, rows, assignmentSchema),
@@ -157,33 +156,25 @@ object VirusPipeline {
       assignments.groupBy("cluster", "label").count().collect()
         .map(r => (r.get(0), r.getLong(2))))
 
-  /** Stage 3 — `driver` (SVMDT): DT impurity×depth and LinearSVC reg
-    * sweeps on the stage-1 vectors, reported in the reference's
-    * console format `"<param>, AUC = NN.NN%"`
-    * (`SVMDT.scala:160-163,195-197`). 50/25/25 seeded split (U3). */
+  /** Stage 3 — `driver` (SVMDT): the DT impurity×depth sweep scored on
+    * the cv split and the LinearSVC reg sweep scored on the test split
+    * (`MlPipeline.dtSweep`/`linearSweep` over `MlPipeline.seededSplit`,
+    * U3), reported in the reference's console format
+    * `"<param>, AUC = NN.NN%"` (`SVMDT.scala:160-163,195-197`). The
+    * splits are cached at the input's partitioning. */
   def classificationReport(spark: SparkSession, samples: DataFrame,
                            seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC}
-    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-    val Array(train, cv, test) = samples.select("label", "features")
-      .randomSplit(Array(0.5, 0.25, 0.25), seed)
-    train.cache(); cv.cache(); test.cache()
-    val evalr = new BinaryClassificationEvaluator()
-      .setMetricName("areaUnderROC")
-    val dt = for (imp <- Seq("entropy", "gini");
-                  depth <- Seq(1, 2, 3, 4, 5, 10, 20)) yield {
-      val m = new DecisionTreeClassifier()
-        .setImpurity(imp).setMaxDepth(depth).setSeed(seed).fit(train)
-      val auc = evalr.evaluate(m.transform(cv))
+    val splits = MlPipeline.seededSplit(samples, seed)
+    splits.foreach(_.cache().count()) // materialize before concurrent fits
+    val Array(train, cv, test) = splits
+    val dt = MlPipeline.dtSweep(train, cv, seed).map { case (imp, depth, auc) =>
       (s"dt-$imp", depth.toDouble, auc,
         f"$imp depth $depth, AUC = ${auc * 100}%2.2f%%")
     }
-    val svc = Seq(0.001, 0.01, 0.1, 1.0, 10.0).map { r =>
-      val m = new LinearSVC().setRegParam(r).setMaxIter(10).fit(train)
-      val auc = evalr.evaluate(m.transform(test))
-      ("svc", r, auc, f"svc reg $r, AUC = ${auc * 100}%2.2f%%")
+    val svc = MlPipeline.linearSweep(train, test, Seq("svc")).map {
+      case (_, r, auc) => ("svc", r, auc, f"svc reg $r, AUC = ${auc * 100}%2.2f%%")
     }
-    Seq(train, cv, test).foreach(_.unpersist(false))
+    splits.foreach(_.unpersist(false))
     import spark.implicits._
     (dt ++ svc).toDF("model", "param", "auc", "line")
   }

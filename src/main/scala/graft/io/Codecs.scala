@@ -115,8 +115,7 @@ object Codecs {
       .map(_.getString(2)).toSeq, path)
   }
 
-  /** K5: the D3 hierarchy JSON (single row holding `Hierarchy.d3Json`). */
-  def writeJson(json: DataFrame, path: String): Unit =
-    Files.write(Paths.get(path),
-      json.collect()(0).getString(0).getBytes(StandardCharsets.UTF_8))
+  /** K5: the D3 hierarchy JSON (`Hierarchy.d3Json`'s rendering), as is. */
+  def writeJson(json: String, path: String): Unit =
+    Files.write(Paths.get(path), json.getBytes(StandardCharsets.UTF_8))
 }

@@ -4,7 +4,8 @@ import breeze.linalg.{DenseVector => BDV}
 import graft.Tables._
 import org.apache.spark.Partitioner
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, LogisticRegression}
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel, KMeansRuns}
+import org.apache.spark.ml.Transformer
+import org.apache.spark.ml.clustering.{KMeansModel, KMeansRuns}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.mllib.classification.SVMModel
@@ -19,15 +20,16 @@ import org.apache.spark.sql.functions._
 /** The reference's ML stages (SURVEY.md §2.8, L1-L8) on `spark.ml`,
   * bound to the `embeddings` table.
   *
-  * Differences from the reference, by necessity (SURVEY §6 caveats):
-  * `KMeans.setRuns` is gone in Spark 2+, so the best-of-N fit
-  * ([[bestOfKMeans]]) and the k-sweep ([[kmeansCostSweep]]) go through
-  * `KMeansRuns`, which fits every (k, seed) run in shared passes as
-  * Spark 1.x's `runs` did; `SVMWithSGD` survives only in RDD mllib, so
-  * its math is reproduced by the batched [[sgdSweep]] (ml10) beside
-  * LinearSVC/OWLQN (ml04); every stochastic step is seeded (the
-  * reference seeded nothing, so its published AUCs are one
-  * unreproducible draw).
+  * Each step of the reference's pipeline has one implementation,
+  * shared by the queries and `VirusPipeline`: every k-means fit goes
+  * through `KMeansRuns` ([[bestOfKMeans]], with `runs = 1` for a single
+  * seeded fit, and [[kmeansCostSweep]]), which fits every (k, seed) run
+  * in shared passes as Spark 1.x's `runs` did (`KMeans.setRuns` is gone
+  * in Spark 2+); [[seededSplit]] is the 50/25/25 split; [[dtSweep]] and
+  * [[linearSweep]] are the classifier sweeps. `SVMWithSGD` survives
+  * only in RDD mllib, so its math is reproduced by the batched
+  * [[sgdSweep]] (ml10). Every stochastic step is seeded (the reference
+  * seeded nothing, so its published AUCs are one unreproducible draw).
   *
   * These queries have no DuckDB oracle (iterative ML is not
   * SQL-expressible) — the driver records a rows-only check.
@@ -36,26 +38,23 @@ import org.apache.spark.sql.functions._
   * data-distributed (per-iteration map + treeAggregate); feature
   * assembly here is one per-row `array_to_vector`, no shuffle. The
   * k-means runs and the SGD regularization grid are batched: one data
-  * pass per iteration serves every run. The DT and LinearSVC grids
+  * pass per iteration serves every run. The DT and linear sweeps
   * dispatch their fits concurrently from the driver ([[inParallel]]),
-  * each fit itself distributed.
+  * each fit itself distributed; each caller chooses its splits'
+  * partition layout, which the fits' arithmetic depends on.
   */
 object MlPipeline {
 
   private val Seed = 42L
 
-  /** Runs independent sweep points concurrently: each fit is itself a
-    * distributed job, and Spark schedules concurrent jobs from one
-    * session fairly — on a cluster this is how a grid search keeps
-    * executors busy while individual fits are small. Results keep
-    * input order (each point is seeded → deterministic). */
   /** Concurrent fit dispatch on the global pool. Measured round 4: a
     * bounded 4-thread pool (4 fits × 8 partitions = exactly the 32
     * task slots) is 25-40% SLOWER than full concurrency here — each
     * fit alternates distributed jobs with driver-side phases
     * (aggregation merge, model construction), and the extra in-flight
     * fits fill those gaps. Keep dispatch unbounded; the per-fit
-    * partition layout (coalesce 8) is what bounds task pressure. */
+    * partition layout (coalesce 8) is what bounds task pressure.
+    * Results keep input order (each point is seeded → deterministic). */
   private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
@@ -225,8 +224,7 @@ object MlPipeline {
     * Shared by `VirusPipeline.sgdReport` and ml10. */
   def sgdSplitSweep(data: DataFrame, seed: Long,
       regParams: Seq[Double] = SgdRegParams): Seq[SgdPoint] = {
-    val Array(train0, _, test0) = data.select("label", "features")
-      .randomSplit(Array(0.5, 0.25, 0.25), seed)
+    val Array(train0, _, test0) = seededSplit(data, seed)
     def toRdd(df: DataFrame) = df.rdd.map { r =>
       LabeledPoint(r.getDouble(0), OldVectors.fromML(
         r.getAs[org.apache.spark.ml.linalg.Vector](1)))
@@ -234,6 +232,62 @@ object MlPipeline {
     val train = toRdd(train0).coalesce(8).cache()
     try sgdSweep(train, toRdd(test0), regParams)
     finally train.unpersist(false)
+  }
+
+  /** U3: the reference's seeded 50/25/25 (train, cv, test) split of a
+    * frame's (label, features) columns (`SVMDT.scala:92-95`). */
+  def seededSplit(data: DataFrame, seed: Long): Array[DataFrame] =
+    data.select("label", "features").randomSplit(Array(0.5, 0.25, 0.25), seed)
+
+  private def rocAuc(scored: DataFrame): Double =
+    new BinaryClassificationEvaluator().setMetricName("areaUnderROC")
+      .evaluate(scored)
+
+  /** L4+L6+L7: the reference's decision-tree sweep
+    * (`SVMDT.scala:147-164`): one seeded tree per (impurity, depth),
+    * entropy/gini × depths 1, 2, 3, 4, 5, 10, 20, fitted on `train`,
+    * with its unrounded ROC AUC on `eval`, in grid order. The fits run
+    * concurrently, so both splits should be materialized. */
+  def dtSweep(train: DataFrame, eval: DataFrame,
+      seed: Long): Seq[(String, Int, Double)] = {
+    val grid = for (imp <- Seq("entropy", "gini");
+                    depth <- Seq(1, 2, 3, 4, 5, 10, 20)) yield (imp, depth)
+    inParallel(grid) { case (imp, depth) =>
+      val m = new DecisionTreeClassifier()
+        .setImpurity(imp).setMaxDepth(depth).setSeed(seed).fit(train)
+      (imp, depth, rocAuc(m.transform(eval)))
+    }
+  }
+
+  /** L5+L7: the reference's linear-classifier sweep (`SVMDT.scala:
+    * 204-214`): for each of `families`, "svc" (LinearSVC) or "lr"
+    * (LogisticRegression), one 10-iteration fit per [[SgdRegParams]]
+    * point on `train`, with its unrounded ROC AUC on `eval`,
+    * family-major. All fits run as ONE concurrent batch (per-family
+    * batches would idle executors while each one's slowest fit
+    * drains), so both splits should be materialized. */
+  def linearSweep(train: DataFrame, eval: DataFrame,
+      families: Seq[String]): Seq[(String, Double, Double)] =
+    inParallel(for (f <- families; r <- SgdRegParams) yield (f, r)) {
+      case (f, r) =>
+        val m: Transformer = f match {
+          case "svc" => new LinearSVC().setRegParam(r).setMaxIter(10).fit(train)
+          case "lr" =>
+            new LogisticRegression().setRegParam(r).setMaxIter(10).fit(train)
+          case other =>
+            throw new IllegalArgumentException(s"unknown model family $other")
+        }
+        (f, r, rocAuc(m.transform(eval)))
+    }
+
+  /** ml01/ml02's fit (L1+L2, reference config `KmeansVirus.scala:
+    * 183-186`): one seeded k = 10 k-means run over the embeddings,
+    * whose (vec_id, label, features) rows come back with their cluster
+    * in `prediction`. */
+  private def embeddingClusters(s: SparkSession, d: String): DataFrame = {
+    val data = embeddings(s, d).select(col("vec_id"), col("label"),
+      array_to_vector(col("embedding")).as("features"))
+    bestOfKMeans(data, k = 10, runs = 1).transform(data)
   }
 
   /** (label, features) — binary label: embeddings.label < 5, mirroring
@@ -263,27 +317,17 @@ object MlPipeline {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ml01: L1+L2 — k-means k=10, tol=1e-6 (reference config,
     // `KmeansVirus.scala:183-186`), seeded; cluster sizes.
-    "ml01_kmeans_sizes" -> ((s, d) => {
-      val data = embeddings(s, d)
-        .select(col("vec_id"), array_to_vector(col("embedding")).as("features"))
-      val model = new KMeans().setK(10).setTol(1e-6).setSeed(Seed)
-        .fit(data)
-      model.transform(data)
+    "ml01_kmeans_sizes" -> ((s, d) =>
+      embeddingClusters(s, d)
         .groupBy(col("prediction").as("cluster"))
         .agg(count(lit(1)).as("n_vectors"))
-        .orderBy("cluster")
-    }),
+        .orderBy("cluster")),
 
     // ml02: A4+A5+A6+M3 — cluster-quality scoring by weighted label
     // entropy over real k-means clusters (ref
     // `costlyWeightedAveEntropyScore`, `SVMDT.scala:264-284`).
     "ml02_kmeans_entropy" -> ((s, d) => {
-      val data = embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-                array_to_vector(col("embedding")).as("features"))
-      val model = new KMeans().setK(10).setTol(1e-6).setSeed(Seed)
-        .fit(data)
-      val counts = model.transform(data)
+      val counts = embeddingClusters(s, d)
         .groupBy(col("prediction").as("cluster"), col("label"))
         .agg(count(lit(1)).as("n"))
       graft.functions.Funcs.clusterEntropy(counts)
@@ -321,7 +365,7 @@ object MlPipeline {
     "ml06_kmeans_centers" -> ((s, d) => {
       val data = embeddings(s, d)
         .select(array_to_vector(col("embedding")).as("features"))
-      val m = new KMeans().setK(10).setTol(1e-6).setSeed(Seed).fit(data)
+      val m = bestOfKMeans(data, k = 10, runs = 1)
       val rows = m.clusterCenters.zipWithIndex.map { case (c, i) =>
         (i, math.round(math.sqrt(c.toArray.map(x => x * x).sum) * 1e6) / 1e6)
       }
@@ -386,20 +430,12 @@ object MlPipeline {
     // `SVMDT.scala:92-95,147-164`).
     "ml03_dt_auc" -> ((s, d) => {
       // see ml04: small splits → few partitions, cheap per-fit jobs
-      val Array(train0, cv0, _) =
-        labeled(s, d).randomSplit(Array(0.5, 0.25, 0.25), Seed)
+      val Array(train0, cv0, _) = seededSplit(labeled(s, d), Seed)
       val train = train0.coalesce(8).cache()
       val cv = cv0.coalesce(8).cache()
       train.count(); cv.count() // materialize before concurrent fits
-      val evalr = new BinaryClassificationEvaluator()
-        .setMetricName("areaUnderROC").setRawPredictionCol("rawPrediction")
-      val grid =
-        for (imp <- Seq("entropy", "gini"); depth <- Seq(1, 2, 3, 4, 5, 10, 20))
-        yield (imp, depth)
-      val rows = inParallel(grid) { case (imp, depth) =>
-        val m = new DecisionTreeClassifier()
-          .setImpurity(imp).setMaxDepth(depth).setSeed(Seed).fit(train)
-        (imp, depth, math.round(evalr.evaluate(m.transform(cv)) * 1e4) / 1e4)
+      val rows = dtSweep(train, cv, Seed).map { case (imp, depth, auc) =>
+        (imp, depth, math.round(auc * 1e4) / 1e4)
       }
       train.unpersist(false); cv.unpersist(false)
       import s.implicits._
@@ -429,26 +465,12 @@ object MlPipeline {
       // the splits are small relative to the cluster: coalesce to a
       // few partitions before caching so each of the ~100 tiny
       // iteration/eval jobs schedules 8 tasks, not shuffle.partitions
-      val Array(train0, _, test0) =
-        labeled(s, d).randomSplit(Array(0.5, 0.25, 0.25), Seed)
+      val Array(train0, _, test0) = seededSplit(labeled(s, d), Seed)
       val train = train0.coalesce(8).cache()
       val test = test0.coalesce(8).cache()
       train.count(); test.count() // materialize before concurrent fits
-      val evalr = new BinaryClassificationEvaluator()
-        .setMetricName("areaUnderROC").setRawPredictionCol("rawPrediction")
-      val regs = Seq(0.001, 0.01, 0.1, 1.0, 10.0)
-      // one concurrent batch across BOTH model families — two
-      // sequential batches would leave executors half-idle while the
-      // slowest fit of each batch drains
-      val grid = regs.map(("svc", _)) ++ regs.map(("lr", _))
-      val rows = inParallel(grid) {
-        case ("svc", r) =>
-          val m = new LinearSVC().setRegParam(r).setMaxIter(10).fit(train)
-          ("svc", r, math.round(evalr.evaluate(m.transform(test)) * 1e4) / 1e4)
-        case (_, r) =>
-          val m = new LogisticRegression().setRegParam(r).setMaxIter(10)
-            .fit(train)
-          ("lr", r, math.round(evalr.evaluate(m.transform(test)) * 1e4) / 1e4)
+      val rows = linearSweep(train, test, Seq("svc", "lr")).map {
+        case (f, r, auc) => (f, r, math.round(auc * 1e4) / 1e4)
       }
       train.unpersist(false); test.unpersist(false)
       import s.implicits._

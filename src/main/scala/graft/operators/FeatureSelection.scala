@@ -16,13 +16,20 @@ import org.apache.spark.sql.functions._
   * the reference's O(#files) scheduler round-trips: every step below
   * is one distributed job over the whole corpus.
   *
+  * Each step has one entry point. The counting steps take the output
+  * of [[distinctCalls]], which a caller runs once and may materialize
+  * to share between ranking and vectorization (the `OfDistinct` names
+  * state that input contract).
+  *
   * Scale notes (100 TB):
-  *   - [[docFreq]] dedups *before* aggregating (reference A1,
-  *     `:337`) — shrinks the shuffle; then the count is a partial+final
-  *     HashAggregate (the `reduceByKey` shape at `:387`).
-  *   - [[infoGainRanked]]'s per-class join is on the token vocabulary
-  *     (small relative to the corpus); totals are a 1-row broadcast.
-  *   - [[vectorize]] replaces the reference's per-sample
+  *   - [[distinctCalls]] dedups *before* [[docFreqOfDistinct]]
+  *     aggregates (reference A1, `:337`) — shrinks the shuffle; then
+  *     the count is a partial+final HashAggregate (the `reduceByKey`
+  *     shape at `:387`).
+  *   - [[infoGainRankedOfDistinct]]'s per-class join is on the token
+  *     vocabulary (small relative to the corpus); totals are a 1-row
+  *     broadcast.
+  *   - [[vectorizeOfDistinct]] replaces the reference's per-sample
   *     leftOuterJoin-per-file loop (`doesFeatureExist`, `:494-519`)
   *     with ONE broadcast semi-join of the corpus against the top-K
   *     feature table.
@@ -37,32 +44,22 @@ object FeatureSelection {
   def distinctCalls(calls: DataFrame): DataFrame =
     calls.dropDuplicates("sample_id", "cls", "token")
 
-  /** A2+A3: document frequency per (token, cls).
-    * Ref `countFeatures`, `FeatureSelectionCloud.scala:376-390`. */
-  def docFreq(calls: DataFrame): DataFrame =
-    docFreqOfDistinct(distinctCalls(calls))
-
-  /** [[docFreq]] over an already-deduplicated calls table — for
-    * callers that materialize [[distinctCalls]] once and feed several
-    * consumers (vp04/vp05 share it between ranking and vectorize). */
+  /** A2+A3: document frequency per (token, cls) of a [[distinctCalls]]
+    * table. Ref `countFeatures`, `FeatureSelectionCloud.scala:376-390`. */
   def docFreqOfDistinct(distinct: DataFrame): DataFrame =
     distinct.groupBy("token", "cls").agg(count(lit(1)).as("n_docs"))
 
-  /** M1+M2+P10+J1: information-gain ranking of tokens for a binary
-    * class split. `totals` is a single-row DataFrame `(p, t)` =
-    * (#positive samples, #all samples) — the reference's driver-side
-    * file counts (`FeatureSelectionCloud.scala:122-123`).
+  /** M1+M2+P10+J1: information-gain ranking of the tokens of a
+    * [[distinctCalls]] table for a binary class split. `totals` is a
+    * single-row DataFrame `(p, t)` = (#positive samples, #all samples)
+    * — the reference's driver-side file counts
+    * (`FeatureSelectionCloud.scala:122-123`).
     *
     * Faithfully reproduces the J1 inner-join quirk
     * (`FeatureSelectionCloud.scala:418`): tokens present in only one
     * class are dropped before ranking. Gains are NaN→0
     * (`replaceNaN`, `:392-399`) and rounded to 6 decimals so ranking
     * ties are stable across engines. */
-  def infoGainRanked(calls: DataFrame, posCls: String,
-                     totals: DataFrame): DataFrame =
-    infoGainRankedOfDistinct(distinctCalls(calls), posCls, totals)
-
-  /** [[infoGainRanked]] over an already-deduplicated calls table. */
   def infoGainRankedOfDistinct(distinct: DataFrame, posCls: String,
                                totals: DataFrame): DataFrame = {
     val df  = docFreqOfDistinct(distinct)
@@ -97,14 +94,10 @@ object FeatureSelection {
   }
 
   /** J2+O5: sparse binary vectorization — which top-K features each
-    * sample contains. One broadcast join for the whole corpus
-    * (replaces the reference's per-sample job storm,
-    * `doesFeatureExist` `FeatureSelectionCloud.scala:494-519`).
+    * sample of a [[distinctCalls]] table contains. One broadcast join
+    * for the whole corpus (replaces the reference's per-sample job
+    * storm, `doesFeatureExist` `FeatureSelectionCloud.scala:494-519`).
     * Output long-form: `(sample_id, label, feature_index)`. */
-  def vectorize(calls: DataFrame, top: DataFrame, posCls: String): DataFrame =
-    vectorizeOfDistinct(distinctCalls(calls), top, posCls)
-
-  /** [[vectorize]] over an already-deduplicated calls table. */
   def vectorizeOfDistinct(distinct: DataFrame, top: DataFrame,
                           posCls: String): DataFrame =
     distinct

@@ -113,19 +113,22 @@ object TextPipeline {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // vp01: A1+A2 document frequency per (token, class).
     "vp01_docfreq" -> ((s, d) =>
-      FeatureSelection.docFreq(docCalls(s, d))
+      FeatureSelection.docFreqOfDistinct(
+          FeatureSelection.distinctCalls(docCalls(s, d)))
         .orderBy("token", "cls")),
 
     // vp02: M1+M2+P10+J1 information-gain ranking (inner-join parity
     // quirk included).
     "vp02_infogain" -> ((s, d) =>
-      FeatureSelection.infoGainRanked(docCalls(s, d), "pos", docTotals(s, d))
+      FeatureSelection.infoGainRankedOfDistinct(
+          FeatureSelection.distinctCalls(docCalls(s, d)), "pos", docTotals(s, d))
         .orderBy("token")),
 
     // vp03: O1+O3 top-K features with 1-based rank.
     "vp03_topfeatures" -> ((s, d) =>
       FeatureSelection.topFeatures(
-        FeatureSelection.infoGainRanked(docCalls(s, d), "pos", docTotals(s, d)),
+        FeatureSelection.infoGainRankedOfDistinct(
+          FeatureSelection.distinctCalls(docCalls(s, d)), "pos", docTotals(s, d)),
         TopK)
         .orderBy("feature_index")),
 

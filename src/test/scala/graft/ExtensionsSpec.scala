@@ -1,12 +1,11 @@
 package graft
 
-import graft.functions.{EntropyAggregator, Funcs, RollingFingerprint}
+import graft.functions.{Funcs, RollingFingerprint}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Custom-extension layer: the codegen'd Catalyst expression equals
-  * its composable twin, and the entropy Aggregator equals the window
-  * formulation (and works from SQL via udaf registration). */
+  * its composable twin. */
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -317,21 +316,6 @@ class ExtensionsSpec extends AnyFunSuite {
       .agg(sum("l_quantity").as("q")).collect()
       .map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(a == b)
-  }
-
-  test("EntropyAggregator equals the window formulation and runs in SQL") {
-    spark.udf.register("label_entropy", udaf(new EntropyAggregator))
-    val counts = Seq((0, "a", 5L), (0, "b", 5L), (1, "a", 9L), (1, "b", 1L),
-      (2, "a", 7L)).toDF("cluster", "label", "n")
-    counts.createOrReplaceTempView("ext_counts")
-    val got = spark.sql(
-      """SELECT cluster, label_entropy(n) AS h FROM ext_counts
-        |GROUP BY cluster ORDER BY cluster""".stripMargin)
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(math.abs(got(0) - math.log(2)) < 1e-12) // 50/50 → ln 2
-    val h1 = -(0.9 * math.log(0.9) + 0.1 * math.log(0.1))
-    assert(math.abs(got(1) - h1) < 1e-12)
-    assert(got(2) == 0.0) // pure cluster
   }
 
   test("GraftExtensions injects the native functions via spark.sql.extensions") {

@@ -17,6 +17,7 @@ class FeatureSelectionSpec extends AnyFunSuite {
   private val dir =
     new java.io.File("src/test/resources/tiny_api_logs").getAbsolutePath
   private lazy val calls = ApiLogReader.read(spark, dir)
+  private lazy val distinct = FeatureSelection.distinctCalls(calls)
   private lazy val totals = ApiLogReader.totals(spark, dir, "virus")
 
   test("reader dedups nothing but drops empty lines; dup lines survive") {
@@ -31,7 +32,7 @@ class FeatureSelectionSpec extends AnyFunSuite {
   }
 
   test("docFreq dedups per sample before counting (A1+A2)") {
-    val df = FeatureSelection.docFreq(calls).collect()
+    val df = FeatureSelection.docFreqOfDistinct(distinct).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(df == Map(
       ("A", "virus") -> 2, ("B", "virus") -> 1, ("C", "virus") -> 1,
@@ -39,7 +40,7 @@ class FeatureSelectionSpec extends AnyFunSuite {
   }
 
   test("J1 inner join drops class-exclusive features; gains hand-match") {
-    val ranked = FeatureSelection.infoGainRanked(calls, "virus", totals)
+    val ranked = FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals)
     val rows = ranked.collect()
       .map(r => r.getString(0) -> r.getDouble(3)).toMap
     // A is virus-only → dropped (the reference's parity quirk)
@@ -49,16 +50,16 @@ class FeatureSelectionSpec extends AnyFunSuite {
   }
 
   test("topFeatures ranks deterministically (gain desc, token asc)") {
-    val ranked = FeatureSelection.infoGainRanked(calls, "virus", totals)
+    val ranked = FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals)
     val top = FeatureSelection.topFeatures(ranked, 10).collect()
       .map(r => (r.getInt(0), r.getString(1)))
     assert(top.toSeq == Seq((1, "B"), (2, "C")))
   }
 
   test("vectorize + libsvm: zero-feature samples emit no row") {
-    val ranked = FeatureSelection.infoGainRanked(calls, "virus", totals)
+    val ranked = FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals)
     val top = FeatureSelection.topFeatures(ranked, 10)
-    val vec = FeatureSelection.vectorize(calls, top, "virus")
+    val vec = FeatureSelection.vectorizeOfDistinct(distinct, top, "virus")
     val byDoc = vec.collect()
       .groupBy(_.getString(0))
       .view.mapValues(_.map(r => (r.getDouble(1), r.getInt(2))).toSet).toMap

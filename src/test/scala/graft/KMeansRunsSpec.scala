@@ -18,6 +18,8 @@ class KMeansRunsSpec extends AnyFunSuite {
   private val Seeds = Seq(42L, 43L, 44L)
   /** TESTDATA.md's smallest tier: 500 dense 64-d embeddings. */
   private val Sf0001 = "/root/testdata/sf0.001"
+  /** The next tier (TESTDATA.md), in the same directory. */
+  private val Sf001 = Sf0001.stripSuffix("sf0.001") + "sf0.01"
 
   private def rowFit(df: DataFrame, k: Int, seed: Long): KMeansModel =
     new KMeans().setSolver("row").setK(k).setTol(1e-6).setSeed(seed).fit(df)
@@ -156,6 +158,19 @@ class KMeansRunsSpec extends AnyFunSuite {
     rows.foreach { r =>
       val o = rowFit(df, r.getInt(0), 42L).summary.trainingCost
       assert(r.getDouble(1) == math.round(o * 1e4) / 1e4, s"k ${r.getInt(0)}")
+    }
+  }
+
+  test("ml01, ml02 and ml06 fit through KMeansRuns within their job counts at sf0.01") {
+    // each is one k-means run (≤ 1 + 1 + 2·2 + 1 + 20 jobs) plus the
+    // query's own aggregation and collect; spark.ml's single fit added
+    // its density (solver choice) job and its eager cluster-size job
+    Seq("ml01_kmeans_sizes" -> 21, "ml02_kmeans_entropy" -> 22,
+        "ml06_kmeans_centers" -> 20).foreach { case (q, max) =>
+      val (rows, jobs) = JobCount.of(spark)(MlPipeline.queries(q)(spark, Sf001).collect())
+      assert(rows.length == 10, s"$q rows")
+      assert(jobs <= max, s"$q ran $jobs jobs")
+      info(s"$q ran $jobs jobs")
     }
   }
 }

@@ -41,19 +41,20 @@ class PropertiesSpec extends AnyFunSuite {
       val totals = Seq((nPerClass.getOrElse("virus", 0).toLong,
         cs.size.toLong)).toDF("p", "t")
 
-      val df = FeatureSelection.docFreq(calls).collect()
+      val distinct = FeatureSelection.distinctCalls(calls)
+      val df = FeatureSelection.docFreqOfDistinct(distinct).collect()
       val dfOk = df.forall(r =>
         r.getLong(2) <= nPerClass.getOrElse(r.getString(1), 0).toLong)
 
       val ranked = FeatureSelection
-        .infoGainRanked(calls, "virus", totals).collect()
+        .infoGainRankedOfDistinct(distinct, "virus", totals).collect()
       val gainOk = ranked.forall { r =>
         val g = r.getDouble(3); g >= 0.0 && g <= 1.0
       }
 
       val top = FeatureSelection.topFeatures(
-        FeatureSelection.infoGainRanked(calls, "virus", totals), 5)
-      val vec = FeatureSelection.vectorize(calls, top, "virus").collect()
+        FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals), 5)
+      val vec = FeatureSelection.vectorizeOfDistinct(distinct, top, "virus").collect()
       val k = top.count()
       val vecOk = vec.forall { r =>
         val fi = r.getInt(2); fi >= 1 && fi <= k &&
@@ -61,7 +62,7 @@ class PropertiesSpec extends AnyFunSuite {
       }
 
       val rows = FeatureSelection.libsvmRows(
-        FeatureSelection.vectorize(calls, top, "virus")).collect()
+        FeatureSelection.vectorizeOfDistinct(distinct, top, "virus")).collect()
       val rowsOk = rows.length <= cs.size &&
         rows.forall(_.getString(1).matches("[01]( \\d+:1)+"))
 

@@ -40,7 +40,8 @@ class ReferenceParitySpec extends AnyFunSuite {
       "reference corpus not available")
     val calls = ApiLogReader.read(spark, s"$refDir/api_logs")
     val totals = ApiLogReader.totals(spark, s"$refDir/api_logs", "virus")
-    val got = FeatureSelection.infoGainRanked(calls, "virus", totals)
+    val got = FeatureSelection.infoGainRankedOfDistinct(
+        FeatureSelection.distinctCalls(calls), "virus", totals)
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
@@ -62,7 +63,8 @@ class ReferenceParitySpec extends AnyFunSuite {
     assert(totals.getLong(0) == 884)  // virus files (readme.md:87)
     assert(totals.getLong(1) == 1604) // total files
     val vocab = FeatureSelection
-      .docFreq(ApiLogReader.read(spark, s"$refDir/api_logs"))
+      .docFreqOfDistinct(FeatureSelection.distinctCalls(
+        ApiLogReader.read(spark, s"$refDir/api_logs")))
       .select("token").distinct().count()
     assert(vocab == 124) // measured on the committed corpus
   }

@@ -79,7 +79,7 @@ class RenderParitySpec extends AnyFunSuite {
     val a = VirusPipeline.run(spark, TestFiles.tinyApiLogs.toString,
       topN = 10, k = 2)
     assertSameBytes(a.top, a.vectors, a.assignments)
-    assert(a.json.collect()(0).getString(0) == toJsonNesting(a.assignments))
+    assert(a.json == toJsonNesting(a.assignments))
     // the apis leaves equal the former vec ⋈ top join + collect_list
     val n = a.top.count()
     val joined = a.vectors
