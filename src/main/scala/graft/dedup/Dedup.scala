@@ -1,5 +1,8 @@
 package graft.dedup
 
+import java.nio.ByteBuffer
+import java.security.MessageDigest
+
 import graft.Tables._
 import graft.functions.Funcs._
 import graft.functions.VecDot
@@ -7,6 +10,7 @@ import graft.operators.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash-groupBy), MinHash signatures + LSH banding, SimHash,
@@ -987,14 +991,14 @@ object Dedup {
     // example a policy review wants to see). Stride is 1 — EXACT
     // occurrence semantics, not dd15's 2×-coverage windows.
     //
-    // Scale: the counting pass shuffles (width, 16-hex digest,
-    // doc_id) — never span text (dd15's rule); groups are bounded by
-    // docs actually sharing a span. Span TEXT is materialized in a
-    // second pass restricted by a semi-join to the cross-doc digests
-    // (late materialization, dd10's lesson) and reduced by min() —
-    // at production scale that pass further prefilters to the docs
-    // containing any offending span. The ladder output is |widths|
-    // rows. The unbounded-length variant (suffix-array
+    // Scale: one walk of each document digests every window of every
+    // width (the key is the first 64 bits of the window's md5, the
+    // same bits as the oracle's 16-hex prefix); the counting pass
+    // shuffles (width, digest, doc_id, pos) — never span text (dd15's
+    // rule); groups are bounded by docs actually sharing a span. Span
+    // TEXT is extracted late, one substring per cross-doc digest
+    // (dd10's lesson), and reduced by min(). The ladder output is
+    // |widths| rows. The unbounded-length variant (suffix-array
     // prefix-doubling) trades these linear digest shuffles for
     // O(log n) global sorts; the bounded ladder is what policy
     // tuning actually consumes.
@@ -1226,205 +1230,96 @@ object Dedup {
     })
   )
 
-  // ---- dd22 span-ladder engines ---------------------------------------
+  // ---- dd22 span ladder ---------------------------------------------
 
-  /** Shared ladder assembly: crossSpans(w, h, n_docs, n_occ, wit) →
-    * the |SpanLadder|-row policy table. Witness text is extracted
-    * LATE — one (doc, pos) substring per cross digest. */
-  private def ladderAssemble(s: SparkSession, docs: DataFrame,
-      crossSpans: DataFrame): DataFrame = {
+  /** The corpus, spread to full parallelism before per-position
+    * work. The fixture parquet reads as 1–2 partitions (it is far
+    * under maxPartitionBytes), and localCheckpoint PINS that — so the
+    * window-digest walk downstream would run on 1–2 cores. One small
+    * round-robin shuffle of the 5000-row doc table buys 32-way md5
+    * throughput; at cluster scale the file split count makes this a
+    * no-op-sized rebalance. Checkpointed because the digest walk and
+    * the witness extraction both read it. */
+  private def ladderDocs(s: SparkSession, d: String): DataFrame =
+    documents(s, d).select(col("doc_id"), col("text"))
+      .repartition(s.sparkContext.defaultParallelism)
+      .localCheckpoint()
+
+  /** dd22's window-digest kernel: (w, doc_id, pos, h) for every width
+    * w in [[SpanLadder]] and every 1-based position pos with
+    * pos + w - 1 ≤ length(text), from ONE walk of each document. h is
+    * the first 8 bytes of md5 over the window's UTF-8 bytes, i.e. the
+    * same 64 bits as `substring(md5(substring(text, pos, w)), 1, 16)`,
+    * so grouping on it equals grouping on that hex prefix (the DuckDB
+    * oracle's key). Code points are counted over the raw UTF-8 bytes
+    * with `UTF8String.numBytesForFirstByte`, the rule Spark's `length`
+    * and `substring` count with; the byte offset of every code point is
+    * found once, so a window's bytes are a slice of the document and
+    * no position walks the string from its start. A null text emits
+    * nothing. One digest per task. */
+  private def windowDigests(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    val perWidth = crossSpans.groupBy("w")
+    val widths = SpanLadder
+    docs.select(col("doc_id"), col("text").cast("binary"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { rows =>
+        val md = MessageDigest.getInstance("MD5")
+        val digest = new Array[Byte](16)
+        val prefix = ByteBuffer.wrap(digest)
+        rows.filter(_._2 != null).flatMap { case (docId, bytes) =>
+          val starts = new Array[Int](bytes.length + 1)
+          var n = 0
+          var i = 0
+          while (i < bytes.length) {
+            starts(n) = i
+            n += 1
+            i += UTF8String.numBytesForFirstByte(bytes(i))
+          }
+          starts(n) = math.min(i, bytes.length)
+          widths.iterator.flatMap { w =>
+            (0 to n - w).iterator.map { p =>
+              md.update(bytes, starts(p), starts(p + w) - starts(p))
+              md.digest(digest, 0, 16)
+              (w, docId, p + 1, prefix.getLong(0))
+            }
+          }
+        }
+      }
+      .toDF("w", "doc_id", "pos", "h")
+  }
+
+  /** dd22: the window digests through ONE election aggregate (digests
+    * seen in ≥ 2 docs, with occurrence counts and the min-(doc, pos)
+    * witness), then ONE per-width aggregate that also extracts each
+    * witness's span LATE — one substring per cross digest, never per
+    * position — and takes the smallest. doc_id is the documents key,
+    * so the witness join keeps one row per cross digest. Widths
+    * without a cross span read 0 with a null span. */
+  private def spanLadder(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val docs = ladderDocs(s, d)
+    val perWidth = windowDigests(s, docs)
+      .groupBy("w", "h")
+      .agg(countDistinct("doc_id").as("n_docs"),
+        count(lit(1)).as("n_occ"),
+        min(struct(col("doc_id"), col("pos"))).as("wit"))
+      .filter(col("n_docs") >= 2)
+      .select(col("w"), col("n_docs"), col("n_occ"),
+        col("wit.doc_id").as("doc_id"), col("wit.pos").as("pos"))
+      .join(docs, Seq("doc_id"))
+      .groupBy("w")
       .agg(count(lit(1)).as("n_cross_spans"),
         max("n_docs").as("max_docs"),
-        sum("n_occ").as("n_cross_occ"))
-    val minSpan = crossSpans
-      .select(col("w"), col("wit.doc_id").as("doc_id"),
-        col("wit.pos").as("pos"))
-      .join(docs, Seq("doc_id"))
-      .select(col("w"), expr("substring(text, pos, w)").as("span"))
-      .groupBy("w").agg(min("span").as("min_cross_span"))
+        sum("n_occ").as("n_cross_occ"),
+        min(expr("substring(text, pos, w)")).as("min_cross_span"))
     SpanLadder.toDF("w")
       .join(perWidth, Seq("w"), "left")
-      .join(minSpan, Seq("w"), "left")
       .select(col("w").cast("long"),
         coalesce(col("n_cross_spans"), lit(0L)).as("n_cross_spans"),
         coalesce(col("max_docs"), lit(0L)).as("max_docs"),
         coalesce(col("n_cross_occ"), lit(0L)).as("n_cross_occ"),
         col("min_cross_span"))
       .orderBy("w")
-  }
-
-  /** The cross-span election at one width over a (doc_id, pos, h)
-    * position table: digests seen in ≥ 2 docs, with occurrence
-    * counts and the min-(doc,pos) witness. */
-  private def crossAt(w: Int, positions: DataFrame): DataFrame =
-    positions.groupBy("h")
-      .agg(countDistinct("doc_id").as("n_docs"),
-        count(lit(1)).as("n_occ"),
-        min(struct(col("doc_id"), col("pos"))).as("wit"))
-      .filter(col("n_docs") >= 2)
-      .select(lit(w).as("w"), col("h"), col("n_docs"), col("n_occ"),
-        col("wit"))
-
-  /** The corpus, spread to full parallelism before per-position
-    * work. The fixture parquet reads as 1–2 partitions (it is far
-    * under maxPartitionBytes), and localCheckpoint PINS that — so
-    * every stride-1 explode + md5 downstream would run on 1–2 cores.
-    * One small round-robin shuffle of the 5000-row doc table buys
-    * 32-way md5 throughput; at cluster scale the file split count
-    * makes this a no-op-sized rebalance. */
-  private def ladderDocs(s: SparkSession, d: String): DataFrame =
-    documents(s, d).select(col("doc_id"), col("text"))
-      .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint()
-
-  private def ladderExploded(docs: DataFrame, w: Int): DataFrame = docs
-    .filter(length(col("text")) >= w)
-    .select(col("doc_id"),
-      explode(sequence(lit(1), length(col("text")) - (w - 1)))
-        .as("pos"), col("text"))
-    .select(col("doc_id"), col("pos"),
-      substring(md5(expr(s"substring(text, pos, $w)")), 1, 16)
-        .as("h"))
-
-  /** dd22, naive engine: one full stride-1 digest explode PER width,
-    * all five rungs through ONE election aggregate. Kept as the
-    * readable in-suite oracle the accelerated engine is spec-proven
-    * equal to (Round11OpsSpec) — and as the engine that WINS below
-    * the dispatch threshold, where job count beats pass volume. */
-  private[graft] def spanLadderNaive(s: SparkSession, d: String)
-      : DataFrame = {
-    val docs = ladderDocs(s, d)
-    // the union is consumed ONCE (by the election) — never
-    // checkpoint it: materializing 5×corpus position rows was a
-    // measured 300 MB write for nothing at sf0.1
-    val hashed = SpanLadder
-      .map(w => ladderExploded(docs, w).select(lit(w).as("w"),
-        col("doc_id"), col("pos"), col("h")))
-      .reduce(_ unionByName _)
-    val crossSpans = hashed.groupBy("w", "h")
-      .agg(countDistinct("doc_id").as("n_docs"),
-        count(lit(1)).as("n_occ"),
-        min(struct(col("doc_id"), col("pos"))).as("wit"))
-      .filter(col("n_docs") >= 2)
-      .localCheckpoint() // feeds the ladder aggregate AND extraction
-    ladderAssemble(s, docs, crossSpans)
-  }
-
-  /** dd22, accelerated engine — the two production accelerations
-    * SCALE.md documented, now implemented and spec-proven equal to
-    * [[spanLadderNaive]] (exactness is a theorem, not a comment):
-    *
-    * 1. HALVING-CANDIDATE PRUNING. Any occurrence of a CROSS span at
-    *    width 2w has both its w-halves equal to the halves of the
-    *    same span's occurrence in ANOTHER doc — so both halves are
-    *    cross spans at w, and level 2w need only probe positions
-    *    where (pos, pos+w) are BOTH cross positions at w. By
-    *    induction the level-w table still contains EVERY occurrence
-    *    of every cross digest (nothing true is lost), while non-cross
-    *    positions — the overwhelming bulk — are dropped before any
-    *    wider work. Only the base width pays the full stride-1
-    *    corpus explode; every wider level is survivor-sized.
-    * 2. MERKLE DIGEST COMPOSITION. The level-2w digest is
-    *    md5(h_left || h_right) over the two level-w digests —
-    *    constant 32-byte hash inputs at every width instead of
-    *    width-length substrings. Group equality is unchanged (equal
-    *    2w-spans ⇔ equal half-digest pairs, modulo md5 collisions
-    *    the naive 16-hex truncation already assumes), so counts,
-    *    witnesses, and the hash-gated output are identical.
-    *
-    * WHERE the pruning starts matters: short grams in natural-ish
-    * text are promiscuous (common phrases make ~70% of the fixture's
-    * width-16 positions cross-doc — measured before this was built),
-    * so promoting from the 16 rung keeps corpus-sized survivor
-    * tables and the join overhead eats the saving (measured 21 s vs
-    * the naive 8.7 s at sf0.1). At width 32 the cross fraction drops
-    * to ~9%, so the narrow rungs {16, 32} are elected by the direct
-    * explode (md5 over ≤ 32-char inputs — the cheap part) and the
-    * pruning + Merkle composition take over for {64, 128, 256} —
-    * exactly the rungs whose long-substring md5 dominated the naive
-    * cost. This is the Lee-et-al. operating regime anyway: policies
-    * cut at ~50 tokens, not 16 chars.
-    *
-    * Scale: two corpus-sized passes (the width-16/32 explodes, digest
-    * computed in the scan stage, nothing per-gram shuffled but the
-    * digest rows); every wider level is a (doc_id, pos)-keyed
-    * equi-join of int+digest survivor tables sized by the duplicate
-    * tail, shrinking per level. Materializations are held to the
-    * minimum that avoids a repeated corpus pass: docs, the fused
-    * narrow election, the prune-base cross positions, and each
-    * level's (tiny) cross table; the survivor-sized promotion joins
-    * are recomputed by their two consumers rather than paying an
-    * eager checkpoint job each. */
-  private[graft] def spanLadderFast(s: SparkSession, d: String)
-      : DataFrame = {
-    val docs = ladderDocs(s, d)
-    val naiveRungs = SpanLadder.take(2)
-    // ONE election job for both narrow rungs (the 21 s → lesson:
-    // at suite SF the job count, not md5 bytes, is the cost)
-    val narrow = naiveRungs
-      .map(w => ladderExploded(docs, w).select(lit(w).as("w"),
-        col("doc_id"), col("pos"), col("h")))
-      .reduce(_ unionByName _)
-      .groupBy("w", "h")
-      .agg(countDistinct("doc_id").as("n_docs"),
-        count(lit(1)).as("n_occ"),
-        min(struct(col("doc_id"), col("pos"))).as("wit"))
-      .filter(col("n_docs") >= 2)
-      .localCheckpoint() // feeds the output AND the prune semi-join
-    val crossParts = scala.collection.mutable.ListBuffer[DataFrame]()
-    crossParts += narrow
-    var w = naiveRungs.last
-    var cross = narrow.filter(col("w") === w)
-    // the one corpus-sized semi-join: prune-base positions whose
-    // digest is cross — checkpointed so no wider level ever
-    // re-explodes the corpus
-    var lvl = ladderExploded(docs, w)
-      .join(cross.select("h"), Seq("h"), "left_semi")
-      .localCheckpoint()
-    SpanLadder.drop(2).foreach { w2 =>
-      require(w2 == 2 * w,
-        s"halving pruning needs a doubling ladder, got $w -> $w2")
-      // survivor-sized from here on: bounded by the duplicate tail,
-      // not the corpus; recomputation beats eager checkpoint jobs
-      val leftHalf = lvl
-        .select(col("doc_id"), col("pos"), col("h").as("hl"))
-      val rightHalf = lvl
-        .select(col("doc_id"), (col("pos") - w).as("pos"),
-          col("h").as("hr"))
-      val promoted = leftHalf.join(rightHalf, Seq("doc_id", "pos"))
-        .select(col("doc_id"), col("pos"),
-          substring(md5(concat(col("hl"), col("hr"))), 1, 16).as("h"))
-      w = w2
-      cross = crossAt(w, promoted)
-        .localCheckpoint() // feeds the output AND the next prune
-      crossParts += cross
-      lvl = promoted.join(cross.select("h"), Seq("h"), "left_semi")
-        .localCheckpoint()
-    }
-    val crossSpans = crossParts.reduce(_ unionByName _)
-    ladderAssemble(s, docs, crossSpans)
-  }
-
-  /** dd22 corpus-size dispatch. Below the threshold the naive engine
-    * measurably wins (6.8 s vs 8.7 s warm at sf0.1): five explodes
-    * through ONE aggregate beat the pruned path's extra jobs when
-    * the whole position table is a few million rows. Above it, pass
-    * volume dominates job count and the pruned path's math takes
-    * over (the naive pays md5 over 16+32+64+128+256 = 496 bytes per
-    * position and shuffles 5× the positions; the fast path pays
-    * 48 bytes per position plus tail-sized work). The threshold is
-    * the same decision broadcast-vs-shuffle joins make, driven by
-    * the same kind of one-scan size probe (sum of the n_chars
-    * column — cheaper than any single rung). */
-  private[graft] val SpanLadderFastMinChars = 100L * 1000 * 1000
-
-  private[graft] def spanLadder(s: SparkSession, d: String): DataFrame = {
-    val chars = documents(s, d)
-      .agg(sum(length(col("text")))).head().getLong(0)
-    if (chars >= SpanLadderFastMinChars) spanLadderFast(s, d)
-    else spanLadderNaive(s, d)
   }
 
   // ---- oracles ------------------------------------------------------

@@ -445,6 +445,10 @@ class Round10OpsSpec extends AnyFunSuite {
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1))
     val got = q("dd22_span_ladder").collect()
+    assert(got.length == graft.dedup.Dedup.SpanLadder.length)
+    // the fixture has cross spans at the widest rung, so no width's
+    // comparison below is vacuous
+    assert(got.last.getLong(1) > 0L)
     graft.dedup.Dedup.SpanLadder.zip(got).foreach { case (w, row) =>
       val perSpan = scala.collection.mutable.Map[String,
         (scala.collection.mutable.Set[Long], Long)]()
@@ -466,6 +470,16 @@ class Round10OpsSpec extends AnyFunSuite {
       if (cross.nonEmpty) assert(row.getString(4) == cross.keys.min)
       else assert(row.isNullAt(4))
     }
+  }
+
+  test("dd22 runs 12 jobs at sf0.01, five times out of five") {
+    val sf001 = d.stripSuffix("sf0.001") + "sf0.01"
+    val jobs = (1 to 5).map { _ =>
+      JobCount.of(spark)(
+        SparkEntry.queries("dd22_span_ladder")(spark, sf001).collect())._2
+    }
+    info(s"dd22 at sf0.01 ran ${jobs.mkString(", ")} jobs")
+    assert(jobs == Seq.fill(5)(12))
   }
 
   test("io21 rollback leaves BOTH snapshot versions on disk — " +

@@ -103,23 +103,6 @@ class Round11OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("dd22 accelerated ladder (halving pruning + Merkle digests) " +
-    "equals the naive per-width explode, row for row") {
-    // exactness as a theorem: the pruning argument (every occurrence
-    // of a cross span at 2w sits on two cross w-halves) and the
-    // Merkle grouping argument (equal 2w-spans ⇔ equal half-digest
-    // pairs) both claim OUTPUT equality — assert it on the fixture
-    // corpus, where the ladder has non-trivial rows at every width
-    val d = "/root/testdata/sf0.001"
-    val fast = graft.dedup.Dedup.spanLadderFast(spark, d).collect()
-    val naive = graft.dedup.Dedup.spanLadderNaive(spark, d).collect()
-    assert(fast.length == graft.dedup.Dedup.SpanLadder.length)
-    assert(fast.toSeq == naive.toSeq)
-    // the fixture must actually exercise the pruning (cross spans at
-    // the widest rung), otherwise this equality is vacuous
-    assert(fast.last.getLong(1) > 0L)
-  }
-
   test("ta26b batched merges, flattened in (round, idx) order, equal " +
     "the sequential trainer's merge sequence exactly") {
     // the parity theorem end-to-end: an independent in-memory

@@ -6,8 +6,13 @@ row-identical for every query — same normalization as the oracle gate
 the partition count cannot be oracle-gated, cached, or trusted across
 cluster resizes.
 
+Only the queries with a result directory in either dump are compared,
+so two dumps of the same subset compare cleanly; a query dumped on one
+side only fails.
+
 Usage: python3 tools/check_invariance.py <outDirA> <outDirB>
 """
+import os
 import sys
 
 import duckdb
@@ -17,26 +22,25 @@ from check_oracle import rows_of
 
 def main():
     a_dir, b_dir = sys.argv[1], sys.argv[2]
-    import json
-    import os
 
-    # union BOTH dumps' query sets (oracle_sql.json keys + result
-    # subdirectories): a query present in only one dump — e.g. a newer
-    # build with extra queries on one side — must FAIL the missing
-    # side's read, not be silently skipped
-    def names_of(d):
-        names = set()
-        try:
-            names |= set(json.load(open(f"{d}/oracle_sql.json")))
-        except FileNotFoundError:
-            pass
-        names |= {n for n in os.listdir(d)
-                  if os.path.isdir(os.path.join(d, n))}
-        return names
+    # graft.Verify lists every registered query in oracle_sql.json even
+    # on a subset run, so only the result directories say what was dumped
+    def dumped(d):
+        return {n for n in os.listdir(d)
+                if os.path.isdir(os.path.join(d, n))}
 
-    names = sorted(names_of(a_dir) | names_of(b_dir))
+    in_a, in_b = dumped(a_dir), dumped(b_dir)
+    names = sorted(in_a | in_b)
+    if not names:
+        print(f"FAIL: no query results in {a_dir} or {b_dir}")
+        sys.exit(1)
     n_pass = n_fail = 0
     for name in names:
+        if name not in in_a or name not in in_b:
+            side = b_dir if name in in_a else a_dir
+            print(f"FAIL {name}: no result directory in {side}")
+            n_fail += 1
+            continue
         try:
             ga = duckdb.sql(f"SELECT * FROM '{a_dir}/{name}/*.parquet'").df()
             gb = duckdb.sql(f"SELECT * FROM '{b_dir}/{name}/*.parquet'").df()
