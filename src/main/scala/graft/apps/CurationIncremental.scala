@@ -71,16 +71,35 @@ object CurationIncremental {
       col("predicted_lang").isin(Langs: _*) &&
       col("dup_bigram_frac") <= MaxDupBigramFrac
 
+  /** One verb's per-document SPINE, checkpointed once: (doc_id, lang,
+    * source, content_key, toks, n_tokens, quality_score,
+    * predicted_lang, dup_bigram_frac) — the routing columns, the md5
+    * digest exact dedup keys on, the one tokenization the decon gram
+    * explode reads, and the gate columns, all from one projection of
+    * the documents frame. Later stages read it through doc_id joins;
+    * none re-derives a score or joins a score frame back onto ids. The
+    * gate columns are TextAnalysis' own score expressions, so they are
+    * ta02/ta03/ta11's values by construction. */
+  private def docSpine(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"), col("source"),
+        md5(col("text")).as("content_key"),
+        graft.functions.Funcs.tokens(col("text")).as("toks"))
+      .select(col("*"), TextAnalysis.tokenBigrams(col("toks")).as("bgs"))
+      .select(col("doc_id"), col("lang"), col("source"),
+        col("content_key"), col("toks"),
+        size(col("toks")).as("n_tokens"),
+        TextAnalysis.qualityScore(col("toks")).as("quality_score"),
+        TextAnalysis.predictedLang(col("toks")).as("predicted_lang"),
+        TextAnalysis.dupBigramFrac(col("bgs")).as("dup_bigram_frac"))
+      .localCheckpoint()
+
   /** Published snapshot schema: id + routing columns + the two gate
     * scores (audit), never the text payload — the curated TEXT stays
     * in the corpus files; this table is the curation VERDICT. */
-  private def curatedRows(docs: DataFrame, finalIds: DataFrame,
-      scored: DataFrame): DataFrame =
-    finalIds
-      .join(docs.select("doc_id", "lang", "source"), Seq("doc_id"))
-      .join(scored.select("doc_id", "n_tokens", "quality_score"),
-        Seq("doc_id"))
-      .select("doc_id", "lang", "source", "n_tokens", "quality_score")
+  private def curatedRows(spine: DataFrame, finalIds: DataFrame): DataFrame =
+    finalIds.join(
+      spine.select("doc_id", "lang", "source", "n_tokens", "quality_score"),
+      Seq("doc_id"))
 
   private def readVersioned(s: SparkSession, root: String,
       marker: String): DataFrame =
@@ -95,49 +114,44 @@ object CurationIncremental {
     val fs = Commit.fileSystem(spark)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
 
-    // docs is a pushdown filter over the parquet table — its four
-    // consumers re-scan cheaper than a corpus-text materialization
-    // reads back (and at 100 TB checkpointing the raw text onto
-    // executor storage is the failure mode, not the optimization);
-    // toks stays checkpointed: three text-heavy consumers share one
-    // tokenize pass
+    // docs is a pushdown filter over the parquet table — its two text
+    // consumers (band signatures, holdout sample) re-scan cheaper than
+    // a corpus-text materialization reads back (and at 100 TB
+    // checkpointing the raw text onto executor storage is the failure
+    // mode, not the optimization); the spine is the one checkpoint
     val docs = baseDocs
-    val toks = TextAnalysis.tokenized(docs).localCheckpoint()
+    val spine = docSpine(docs)
     clock.done("s1_base_tokenize")
 
-    val (scored, finalIds) = dedupGateDecon(spark, root, docs, toks,
-      gateCond, publishBanks = true, clock.done)
+    val finalIds = dedupGateDecon(spark, root, docs, spine, gateCond,
+      publishBanks = true, clock.done)
 
-    curatedRows(docs, finalIds, scored)
+    curatedRows(spine, finalIds)
       .write.mode("overwrite").parquet(s"$root/snap0")
     Commit.writeMarker(spark, s"$root/_SNAPSHOT", "snap0")
     clock.done("s6_base_publish")
   }
 
-  /** The gate-independent SPINE shared by cu01's hand-rule curation
+  /** The gate-independent stages shared by cu01's hand-rule curation
     * and cu05's artifact-gated one: exact first-wins dedup, band-bank
-    * near-dup drop, the scored/repetition frames, the pinned holdout,
-    * and decontamination — everything whose verdict cannot depend on
-    * which quality gate is in force. `gate` is the ONLY varying
+    * near-dup drop, the gates over the [[docSpine]], the pinned
+    * holdout, and decontamination — everything whose verdict cannot
+    * depend on which quality gate is in force. `gate` is the ONLY varying
     * verdict (the hand rule incl. quality_score for cu01; structural-
     * only for cu05, whose trained artifact replaces the rule
     * downstream); `publishBanks` is cu01's (applyDelta rolls the key
     * and band banks forward; cu05's pregate table never does). Stage
     * callbacks fire under cu01's historical names so bench stage rows
-    * stay comparable round-over-round. Returns (scored frame,
-    * survivor ids after gate + holdout + decon). Factored so the two
-    * pipelines' equivalence theorems hold by SHARED CODE, not by two
-    * copies kept manually in sync. */
+    * stay comparable round-over-round. Returns the survivor ids
+    * after gate + holdout + decon. Factored so the two pipelines'
+    * equivalence theorems hold by SHARED CODE, not by two copies kept
+    * manually in sync. */
   private def dedupGateDecon(spark: SparkSession, root: String,
-      docs: DataFrame, toks: DataFrame, gate: Column,
-      publishBanks: Boolean,
-      stageDone: String => Unit): (DataFrame, DataFrame) = {
-    // exact first-wins (+ the key bank: ALL digests ever seen).
-    // keyed is DIGEST-sized (id + md5, never text), so checkpointing
-    // it is bounded state — without it the key-bank write re-ran the
-    // md5 pass over the corpus text for the same digests (guide §1.2)
-    val keyed = docs.select(col("doc_id"), md5(col("text")).as("content_key"))
-      .localCheckpoint()
+      docs: DataFrame, spine: DataFrame, gate: Column,
+      publishBanks: Boolean, stageDone: String => Unit): DataFrame = {
+    // exact first-wins (+ the key bank: ALL digests ever seen), over
+    // the spine's digests — the md5 text pass ran once, in the spine
+    val keyed = spine.select("doc_id", "content_key")
     val keep1 = keyed.groupBy("content_key").agg(min("doc_id").as("doc_id"))
       .select("doc_id").localCheckpoint()
     if (publishBanks) {
@@ -162,13 +176,8 @@ object CurationIncremental {
     val keep2 = keep1.join(dropped, Seq("doc_id"), "left_anti")
     stageDone("s3_base_neardup_bank")
 
-    // gates over the shared tokenization
-    val scored = TextAnalysis.scoredT(toks).localCheckpoint()
-    val gated = keep2
-      .join(scored, Seq("doc_id"))
-      .join(TextAnalysis.repetitionScoredT(toks)
-        .select("doc_id", "dup_bigram_frac"), Seq("doc_id"))
-      .filter(gate)
+    // gates over the spine's gate columns
+    val gated = keep2.join(spine, Seq("doc_id")).filter(gate)
       .select("doc_id").localCheckpoint()
     stageDone("s4_base_gates")
 
@@ -177,13 +186,22 @@ object CurationIncremental {
       .coalesce(1).write.mode("overwrite").parquet(s"$root/bench")
     Commit.writeMarker(spark, s"$root/_BENCH", "bench")
     val bench = spark.read.parquet(s"$root/bench")
-    val candToks = toks.join(gated, Seq("doc_id"), "left_semi")
-    val finalIds = gated
+    val finalIds = deconIds(spine, gated, bench)
+    stageDone("s5_base_decon")
+    finalIds
+  }
+
+  /** The gated survivors minus the holdout and minus every survivor
+    * sharing a gram with it — the gram explode runs over the
+    * survivors' spine tokens only. */
+  private def deconIds(spine: DataFrame, gated: DataFrame,
+      bench: DataFrame): DataFrame = {
+    val candToks = spine.select("doc_id", "toks")
+      .join(gated, Seq("doc_id"), "left_semi")
+    gated
       .join(bench.select("doc_id"), Seq("doc_id"), "left_anti")
       .join(TextAnalysis.contaminatedIdsT(candToks, bench),
         Seq("doc_id"), "left_anti")
-    stageDone("s5_base_decon")
-    (scored, finalIds)
   }
 
   /** Apply one delta batch against the published state at `root`:
@@ -202,20 +220,18 @@ object CurationIncremental {
     val bank = readVersioned(spark, root, "_BANK")
     val bench = readVersioned(spark, root, "_BENCH")
 
-    // delta slice and its md5 keys recompute from the pushdown scan
-    // cheaper than they materialize (curateBase's reasoning); toks
-    // stays checkpointed for its three text consumers
+    // the delta slice recomputes from the pushdown scan cheaper than
+    // it materializes (curateBase's reasoning); the spine is the one
+    // checkpoint
     val docs = deltaDocs
-    val toks = TextAnalysis.tokenized(docs).localCheckpoint()
+    val spine = docSpine(docs)
     clock.done("s7_delta_tokenize")
 
     // exact: first-wins WITHIN the batch, then anti-join against the
     // key bank (dd09's novelty check — one digest-keyed join, the
-    // corpus text never moves). keyed checkpointed for the same
-    // reason as curateBase's: its second consumer is s11's key-bank
-    // roll, which otherwise re-ran the batch's md5 text pass
-    val keyed = docs.select(col("doc_id"), md5(col("text")).as("content_key"))
-      .localCheckpoint()
+    // corpus text never moves); s11's key-bank roll reads the same
+    // spine digests
+    val keyed = spine.select("doc_id", "content_key")
     val keep1 = keyed.groupBy("content_key").agg(min("doc_id").as("doc_id"))
       .join(keys, Seq("content_key"), "left_anti")
       .select("doc_id").localCheckpoint()
@@ -239,18 +255,9 @@ object CurationIncremental {
 
     // gates + decontamination vs the pinned holdout — batch-local
     // text work only
-    val scored = TextAnalysis.scoredT(toks).localCheckpoint()
-    val gated = keep2
-      .join(scored, Seq("doc_id"))
-      .join(TextAnalysis.repetitionScoredT(toks)
-        .select("doc_id", "dup_bigram_frac"), Seq("doc_id"))
-      .filter(gateCond)
+    val gated = keep2.join(spine, Seq("doc_id")).filter(gateCond)
       .select("doc_id").localCheckpoint()
-    val candToks = toks.join(gated, Seq("doc_id"), "left_semi")
-    val finalIds = gated
-      .join(bench.select("doc_id"), Seq("doc_id"), "left_anti")
-      .join(TextAnalysis.contaminatedIdsT(candToks, bench),
-        Seq("doc_id"), "left_anti")
+    val finalIds = deconIds(spine, gated, bench)
     clock.done("s10_delta_gates_decon")
 
     // MERGE publish (io19: anti-join ∪ union, never full-outer) into
@@ -258,7 +265,7 @@ object CurationIncremental {
     // under their own markers. Under monotone ingest the anti-join is
     // provably empty (new ids), but the MERGE shape is kept — it is
     // the production path when a delta carries updates too.
-    val cdc = curatedRows(docs, finalIds, scored).localCheckpoint()
+    val cdc = curatedRows(spine, finalIds).localCheckpoint()
     readVersioned(spark, root, "_SNAPSHOT")
       .join(broadcast(cdc.select("doc_id")), Seq("doc_id"), "left_anti")
       .unionByName(cdc)
@@ -435,17 +442,17 @@ object CurationIncremental {
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     // raw-text checkpoint dropped (curateBase's reasoning)
     val docs = docs0
-    val toks = TextAnalysis.tokenized(docs).localCheckpoint()
-    // the shared spine with STRUCTURAL gates only — the trained
+    val spine = docSpine(docs)
+    // the shared stages with STRUCTURAL gates only — the trained
     // artifact replaces the quality RULE, so quality_score never
     // gates here (the pregate verdicts must be gate-independent)
-    val (scored, pregateIds) = dedupGateDecon(spark, root, docs, toks,
+    val pregateIds = dedupGateDecon(spark, root, docs, spine,
       col("predicted_lang").isin(Langs: _*) &&
         col("dup_bigram_frac") <= MaxDupBigramFrac,
       publishBanks = false, _ => ())
     pregateIds
-      .join(docs.select("doc_id", "lang", "source"), Seq("doc_id"))
-      .join(scored.select("doc_id", "n_tokens"), Seq("doc_id"))
+      .join(spine.select("doc_id", "lang", "source", "n_tokens"),
+        Seq("doc_id"))
       .write.mode("overwrite").parquet(s"$root/pregate/v0")
     Commit.writeMarker(spark, s"$root/_PREGATE", "pregate/v0")
     // gate artifact v1: ta32's classifier trained on the even labeled
@@ -611,8 +618,7 @@ object CurationIncremental {
       val root = graft.io.JsonLines.stagingDir("curation_refresh_stream")
       val fs = Commit.fileSystem(s)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = graft.streaming.EventStream.streamSession(s, 8)
       val docs = graft.Tables.documents(ss, d)
       curateBase(ss, docs, root)
       val waves = 3

@@ -34,9 +34,13 @@ import org.apache.spark.sql.types._
 object VirusPipeline {
 
   /** `assignments` and `clusterReport` are local frames, `json` is the
-    * rendered `data.json`; `top` and `vectors` are cached. */
+    * rendered `data.json`; `top`, `vectors` and `samples` (the fit's
+    * input, `assemble(vectors, top.count)`, so a caller that assembles
+    * the vectors again reads it) are cached until the caller releases
+    * them. */
   final case class Artifacts(top: DataFrame, vectors: DataFrame,
-      assignments: DataFrame, clusterReport: DataFrame, json: String)
+      samples: DataFrame, assignments: DataFrame, clusterReport: DataFrame,
+      json: String)
 
   private val assignmentSchema = StructType(Seq(
     StructField("cluster", IntegerType),
@@ -110,8 +114,8 @@ object VirusPipeline {
 
     // stage 2 — clustering (KmeansVirus): sparse vectors per sample
     // cached for the fit, the assignments below and callers'
-    // `assemble(a.vectors, n)`; the fit's first job (its instance
-    // count) fills the cache
+    // `assemble(a.vectors, n)`, and returned so they can release it;
+    // the fit's first job (its instance count) fills the cache
     val samples = assemble(vec, nFeatures).cache()
     // L1 setRuns parity: the reference trains with `setRuns(10)`
     // (`KmeansVirus.scala:183-186`) — the best of `runs` seeded fits by
@@ -141,7 +145,7 @@ object VirusPipeline {
     val json = Hierarchy.d3Json(rows)
     clock.done("s2_cluster")
 
-    Artifacts(top, vec, local(spark, rows, assignmentSchema),
+    Artifacts(top, vec, samples, local(spark, rows, assignmentSchema),
       local(spark, report, reportSchema), json)
   }
 

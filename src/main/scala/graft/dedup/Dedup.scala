@@ -993,15 +993,16 @@ object Dedup {
     //
     // Scale: one walk of each document digests every window of every
     // width (the key is the first 64 bits of the window's md5, the
-    // same bits as the oracle's 16-hex prefix); the counting pass
-    // shuffles (width, digest, doc_id, pos) — never span text (dd15's
-    // rule); groups are bounded by docs actually sharing a span. Span
-    // TEXT is extracted late, one substring per cross-doc digest
-    // (dd10's lesson), and reduced by min(). The ladder output is
-    // |widths| rows. The unbounded-length variant (suffix-array
-    // prefix-doubling) trades these linear digest shuffles for
-    // O(log n) global sorts; the bounded ladder is what policy
-    // tuning actually consumes.
+    // same bits as the oracle's 16-hex prefix) and folds the
+    // document's repeats; the counting pass shuffles one (width,
+    // digest, doc_id, occurrences, first pos) row per document and
+    // distinct window — never span text (dd15's rule); groups are
+    // bounded by docs actually sharing a span. Span TEXT is extracted
+    // late, one substring per cross-doc digest (dd10's lesson), and
+    // reduced by min(). The ladder output is |widths| rows. The
+    // unbounded-length variant (suffix-array prefix-doubling) trades
+    // these linear digest shuffles for O(log n) global sorts; the
+    // bounded ladder is what policy tuning actually consumes.
     "dd22_span_ladder" -> ((s, d) => spanLadder(s, d)),
 
     // dd23: DUPLICATE-SPAN REMOVAL — the rewrite rung above dd22's
@@ -1245,18 +1246,24 @@ object Dedup {
       .repartition(s.sparkContext.defaultParallelism)
       .localCheckpoint()
 
-  /** dd22's window-digest kernel: (w, doc_id, pos, h) for every width
-    * w in [[SpanLadder]] and every 1-based position pos with
-    * pos + w - 1 ≤ length(text), from ONE walk of each document. h is
-    * the first 8 bytes of md5 over the window's UTF-8 bytes, i.e. the
-    * same 64 bits as `substring(md5(substring(text, pos, w)), 1, 16)`,
-    * so grouping on it equals grouping on that hex prefix (the DuckDB
-    * oracle's key). Code points are counted over the raw UTF-8 bytes
-    * with `UTF8String.numBytesForFirstByte`, the rule Spark's `length`
-    * and `substring` count with; the byte offset of every code point is
+  /** dd22's window-digest kernel: one row (w, h, doc_id, occ, pos)
+    * per width w in [[SpanLadder]] and per distinct window digest h of
+    * one document, from ONE walk of each document — occ is how often
+    * the window occurs in the document and pos the 1-based position of
+    * its first occurrence. A window spans code points pos .. pos + w - 1
+    * with pos + w - 1 ≤ length(text). h is the first 8 bytes of md5
+    * over the window's UTF-8 bytes, i.e. the same 64 bits as
+    * `substring(md5(substring(text, pos, w)), 1, 16)`, so grouping on
+    * it equals grouping on that hex prefix (the DuckDB oracle's key).
+    * Code points are counted over the raw UTF-8 bytes with
+    * `UTF8String.numBytesForFirstByte`, the rule Spark's `length` and
+    * `substring` count with; the byte offset of every code point is
     * found once, so a window's bytes are a slice of the document and
-    * no position walks the string from its start. A null text emits
-    * nothing. One digest per task. */
+    * no position walks the string from its start. Folding a document's
+    * repeats here is the per-sample distinct the paper's stage 1 takes
+    * before its cross-sample count: the election then counts documents
+    * with a plain count, never a distinct. A null text emits nothing.
+    * One digest per task. */
   private def windowDigests(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val widths = SpanLadder
@@ -1277,35 +1284,51 @@ object Dedup {
           }
           starts(n) = math.min(i, bytes.length)
           widths.iterator.flatMap { w =>
-            (0 to n - w).iterator.map { p =>
+            // digest -> (first position, occurrences) in this document
+            val seen = scala.collection.mutable.LongMap.empty[Array[Int]]
+            var p = 0
+            while (p <= n - w) {
               md.update(bytes, starts(p), starts(p + w) - starts(p))
               md.digest(digest, 0, 16)
-              (w, docId, p + 1, prefix.getLong(0))
+              val h = prefix.getLong(0)
+              val e = seen.getOrNull(h)
+              if (e == null) seen.update(h, Array(p + 1, 1)) else e(1) += 1
+              p += 1
             }
+            seen.iterator.map { case (h, e) => (w, h, docId, e(1), e(0)) }
           }
         }
       }
-      .toDF("w", "doc_id", "pos", "h")
+      .toDF("w", "h", "doc_id", "occ", "pos")
   }
 
-  /** dd22: the window digests through ONE election aggregate (digests
-    * seen in ≥ 2 docs, with occurrence counts and the min-(doc, pos)
-    * witness), then ONE per-width aggregate that also extracts each
-    * witness's span LATE — one substring per cross digest, never per
-    * position — and takes the smallest. doc_id is the documents key,
-    * so the witness join keeps one row per cross digest. Widths
-    * without a cross span read 0 with a null span. */
-  private def spanLadder(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = ladderDocs(s, d)
-    val perWidth = windowDigests(s, docs)
+  /** dd22's election: (w, n_docs, n_occ, doc_id, pos), one row per
+    * window digest seen in ≥ 2 docs of the (doc_id, text) frame `docs`,
+    * with its total occurrence count and the min-(doc, pos) witness —
+    * each kernel row already holds its document's first position, so
+    * the minimum over rows is the minimum over occurrences. doc_id is
+    * the documents key, so a (w, h) group holds one row per document
+    * and n_docs is a plain count. */
+  private[graft] def crossDigests(s: SparkSession,
+      docs: DataFrame): DataFrame =
+    windowDigests(s, docs)
       .groupBy("w", "h")
-      .agg(countDistinct("doc_id").as("n_docs"),
-        count(lit(1)).as("n_occ"),
+      .agg(count(lit(1)).as("n_docs"),
+        sum("occ").as("n_occ"),
         min(struct(col("doc_id"), col("pos"))).as("wit"))
       .filter(col("n_docs") >= 2)
       .select(col("w"), col("n_docs"), col("n_occ"),
         col("wit.doc_id").as("doc_id"), col("wit.pos").as("pos"))
+
+  /** dd22: the [[crossDigests]] election, then ONE per-width aggregate
+    * that also extracts each witness's span LATE — one substring per
+    * cross digest, never per position — and takes the smallest. The
+    * witness join keeps one row per cross digest. Widths without a
+    * cross span read 0 with a null span. */
+  private def spanLadder(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val docs = ladderDocs(s, d)
+    val perWidth = crossDigests(s, docs)
       .join(docs, Seq("doc_id"))
       .groupBy("w")
       .agg(count(lit(1)).as("n_cross_spans"),

@@ -750,25 +750,57 @@ object TextAnalysis {
     * on both without a self-join. */
   def scored(docs: DataFrame): DataFrame = scoredT(tokenized(docs))
 
+  // ---- per-document score columns over a token-array column -------
+  // One definition of each formula: the ta02/ta03/ta11 frames, the
+  // queries built on them and curation's per-document spine all select
+  // these columns.
+
+  /** ta03's stopword-profile argmax (fixed tie-break order: profile
+    * declaration order). */
+  private[graft] def predictedLang(toks: Column): Column = {
+    val Seq(en, de, es) = Profiles.map { case (_, ws) => countIn(toks, ws) }
+    when(en >= de && en >= es, "en").when(de >= es, "de").otherwise("es")
+  }
+
+  private def meanTokenLen(toks: Column): Column =
+    aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") /
+      size(toks).cast("double")
+
+  private def stopwordRatio(toks: Column): Column =
+    countIn(toks, Stopwords).cast("double") / size(toks).cast("double")
+
+  /** ta02's blended quality score, rounded to 6 decimals. */
+  private[graft] def qualityScore(toks: Column): Column = round(
+    lit(0.5) * stopwordRatio(toks) +
+      lit(0.3) * least(meanTokenLen(toks) / 8.0, lit(1.0)) +
+      lit(0.2) * least(size(toks).cast("double") / 100.0, lit(1.0)), 6)
+
+  /** Adjacent-token bigrams as space-joined strings; null when there
+    * are fewer than 2 tokens (sequence(1, 0) would count DOWN in
+    * Spark). Selected as its own column before [[dupBigramFrac]] reads
+    * it twice. */
+  private[graft] def tokenBigrams(toks: Column): Column =
+    when(size(toks) >= 2, transform(sequence(lit(1), size(toks) - 1),
+      i => concat(element_at(toks, i), lit(" "), element_at(toks, i + 1))))
+
+  /** The share of repeated elements of `xs` (0.0 when `n` ≤ 0). */
+  private def dupFrac(xs: Column, n: Column): Column =
+    when(n > 0, round(lit(1.0) - size(array_distinct(xs)).cast("double")
+      / size(xs).cast("double"), 6)).otherwise(0.0)
+
+  /** ta11's repeated-bigram share over a [[tokenBigrams]] column. */
+  private[graft] def dupBigramFrac(bgs: Column): Column =
+    dupFrac(bgs, coalesce(size(bgs), lit(0)))
+
   /** [[scored]] over a pre-tokenized (doc_id, toks) frame — same
     * values, zero re-tokenization. */
   private[graft] def scoredT(toksDf: DataFrame): DataFrame = {
     val toks = col("toks")
-    val nTok = size(toks).cast("double")
-    val meanLen = aggregate(toks, lit(0L), (a, t) => a + length(t))
-      .cast("double") / nTok
-    val stopRatio = countIn(toks, Stopwords).cast("double") / nTok
-    val score = round(
-      lit(0.5) * stopRatio +
-        lit(0.3) * least(meanLen / 8.0, lit(1.0)) +
-        lit(0.2) * least(nTok / 100.0, lit(1.0)), 6)
-    val Seq(en, de, es) = Profiles.map { case (_, ws) => countIn(toks, ws) }
     toksDf.select(col("doc_id"), size(toks).as("n_tokens"),
-      round(meanLen, 6).as("mean_token_len"),
-      round(stopRatio, 6).as("stopword_ratio"),
-      score.as("quality_score"),
-      when(en >= de && en >= es, "en")
-        .when(de >= es, "de").otherwise("es").as("predicted_lang"))
+      round(meanTokenLen(toks), 6).as("mean_token_len"),
+      round(stopwordRatio(toks), 6).as("stopword_ratio"),
+      qualityScore(toks).as("quality_score"),
+      predictedLang(toks).as("predicted_lang"))
   }
 
   /** The ta02 view of `scored` (no language column). */
@@ -784,24 +816,12 @@ object TextAnalysis {
   /** [[repetitionScored]] over a pre-tokenized (doc_id, toks) frame. */
   private[graft] def repetitionScoredT(toksDf: DataFrame): DataFrame =
     toksDf
-      .select(col("doc_id"), col("toks"),
-        // null when <2 tokens (sequence(1,0) would count DOWN in
-        // Spark); coalesced to empty-equivalent below
-        when(size(col("toks")) >= 2, expr(
-          "transform(sequence(1, size(toks) - 1), " +
-            "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"))
-          .as("bgs"))
+      .select(col("doc_id"), col("toks"), tokenBigrams(col("toks")).as("bgs"))
       .select(col("doc_id"),
         size(col("toks")).as("n_tokens"),
-        when(size(col("toks")) > 0,
-          round(lit(1.0) - size(array_distinct(col("toks"))).cast("double")
-            / size(col("toks")).cast("double"), 6))
-          .otherwise(0.0).as("dup_token_frac"),
+        dupFrac(col("toks"), size(col("toks"))).as("dup_token_frac"),
         coalesce(size(col("bgs")), lit(0)).as("n_bigrams"),
-        when(coalesce(size(col("bgs")), lit(0)) > 0,
-          round(lit(1.0) - size(array_distinct(col("bgs"))).cast("double")
-            / size(col("bgs")).cast("double"), 6))
-          .otherwise(0.0).as("dup_bigram_frac"))
+        dupBigramFrac(col("bgs")).as("dup_bigram_frac"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ta01: token counting (whitespace tokenizer; total + distinct).
@@ -822,13 +842,11 @@ object TextAnalysis {
     // fixed tie-break order (profile declaration order).
     "ta03_langid" -> ((s, d) => {
       val toks = tokens(col("text"))
-      val scores = Profiles.map { case (l, ws) => l -> countIn(toks, ws) }
-      val Seq(en, de, es) = scores.map(_._2)
+      val Seq(en, de, es) = Profiles.map { case (_, ws) => countIn(toks, ws) }
       documents(s, d)
         .select(col("doc_id"), col("lang"),
           en.as("s_en"), de.as("s_de"), es.as("s_es"),
-          when(en >= de && en >= es, "en")
-            .when(de >= es, "de").otherwise("es").as("predicted_lang"))
+          predictedLang(toks).as("predicted_lang"))
         .orderBy("doc_id")
     }),
 
@@ -840,14 +858,10 @@ object TextAnalysis {
     // shows up downstream). One aggregate to a |langs|² table; the
     // share window runs over that bounded table.
     "ta22_lang_confusion" -> ((s, d) => {
-      val toks = tokens(col("text"))
-      val scores = Profiles.map { case (l, ws) => l -> countIn(toks, ws) }
-      val Seq(en, de, es) = scores.map(_._2)
       val wl = org.apache.spark.sql.expressions.Window.partitionBy("lang")
       documents(s, d)
         .select(col("lang"),
-          when(en >= de && en >= es, "en")
-            .when(de >= es, "de").otherwise("es").as("predicted_lang"))
+          predictedLang(tokens(col("text"))).as("predicted_lang"))
         .groupBy("lang", "predicted_lang")
         .agg(count(lit(1)).as("n"))
         .withColumn("share",

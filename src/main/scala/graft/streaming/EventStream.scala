@@ -49,6 +49,23 @@ object EventStream {
         col("n"), col("sum_value"))
       .orderBy("hour", "event_type")
 
+  /** A dedicated child session for one stream, with
+    * `statePartitions` shuffle partitions: every stateful operator
+    * keeps one state store PER shuffle partition, so the count sizes
+    * the stream's state stores to its state without touching the batch
+    * session's plans. The per-batch state of these streams is tiny —
+    * 8 stores instead of the batch session's partition count cut
+    * stream startup/commit overhead; a state bounded by a constant
+    * number of keys whatever the table size (st23's per-column
+    * register buffer) takes 1. On a real deployment the partition
+    * count follows state size. */
+  private[graft] def streamSession(spark: SparkSession,
+      statePartitions: Int): SparkSession = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss
+  }
+
   /** Stages `copies` symlinks to events.parquet in a temp dir
     * (FileStreamSource requires a directory; a real deployment streams
     * from an arriving-files directory anyway), runs `build` on a
@@ -57,13 +74,7 @@ object EventStream {
   private def runStream(spark: SparkSession, dir: String, sinkName: String,
       copies: Int, outputMode: String)
       (build: DataFrame => DataFrame): DataFrame = {
-    // dedicated child session: every stateful operator keeps one state
-    // store PER shuffle partition, and this table's per-batch state is
-    // tiny — 8 stores instead of the batch session's partition count
-    // cuts stream startup/commit overhead without touching batch plans
-    // (on a real deployment the partition count follows state size)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
+    val ss = streamSession(spark, 8)
     val fileSchema = probeSchema(ss, s"$dir/events.parquet")
     val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_")
     // everything after dir creation is inside the try: a failure in
@@ -377,13 +388,13 @@ object EventStream {
     StructField("label", IntegerType)))
 
   /** The table twin of [[runStream]]: a parquet file stream over one
-    * testdata table, drained to a memory sink. */
+    * testdata table, drained to a memory sink, in a
+    * [[streamSession]] with `statePartitions` state stores. */
   private def runTableStream(spark: SparkSession, dir: String,
-      table: String, schema: StructType,
-      sinkName: String, outputMode: String)
+      table: String, schema: StructType, sinkName: String,
+      outputMode: String, statePartitions: Int)
       (build: DataFrame => DataFrame): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
+    val ss = streamSession(spark, statePartitions)
     val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_")
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
@@ -410,7 +421,7 @@ object EventStream {
       sinkName: String, outputMode: String = "append")
       (build: DataFrame => DataFrame): DataFrame =
     runTableStream(spark, dir, "documents", docsSchema, sinkName,
-      outputMode)(build)
+      outputMode, statePartitions = 8)(build)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // st01: the streaming twin of q11 — executed through a real
@@ -539,7 +550,7 @@ object EventStream {
           col("embedding").as("he"), col("nrm").as("hn"))
         .localCheckpoint() // feeds the anti-join AND the scan join
       runTableStream(s, d, "embeddings", embeddingsSchema,
-        "st_sem_decon", outputMode = "complete") { df =>
+        "st_sem_decon", outputMode = "complete", statePartitions = 8) { df =>
         df.join(hold.select(col("h_id").as("vec_id")),
             Seq("vec_id"), "left_anti")
           .select(col("vec_id"), col("embedding"),
@@ -712,10 +723,13 @@ object EventStream {
       // scalars then MERGE across buckets on the driver — ≤
       // |columns|·(m+1) bounded rows, and the merge is exactly the
       // law the query exists to prove (counts add, min/max combine,
-      // registers max).
+      // registers max). The buffer holds at most |columns|·(m+1)
+      // keys at any table size, so ONE state store holds it: eight
+      // spread a few hundred keys over eight stores, each with its own
+      // task per microbatch.
       val buf = graft.functions.Timing.t("st23.stream")(
         runTableStream(s, d, "lineitem", liSchema,
-        "st_stats_buf", "complete") { df =>
+        "st_stats_buf", "complete", statePartitions = 1) { df =>
         unpivot(df)
           .select(col("column_name"), col("repr"),
             md5(col("repr")).as("hx"))
@@ -980,8 +994,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       // stage the source as three distinct files → three microbatches;
       // staging through the adaptive loader means the staged files
       // carry a normalized instant ts whatever the source encoding
@@ -1052,8 +1065,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val docs0 = graft.Tables.documents(ss, d)
         .select("doc_id", "text", "lang", "source")
       val b0 = docs0.withColumn("version", lit(1L))
@@ -1149,8 +1161,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val docs0 = graft.Tables.documents(ss, d)
         .select("doc_id", "text", "lang", "source")
       val out = s"$root/tbl"
@@ -1235,8 +1246,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val docs0 = graft.Tables.documents(ss, d)
         .select("doc_id", "text", "lang", "source", "n_chars")
       val out = s"$root/tbl"
@@ -1342,8 +1352,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(tmp), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val (wave, maxId) = sim.postSwapWave(ss, d)
       val w = wave.localCheckpoint()
       // three log-structured microbatches: contiguous slices of the
@@ -1444,8 +1453,7 @@ object EventStream {
       // inherited from a previous run's committed swap
       fs.delete(new Path(root), true)
       fs.delete(new Path(tmp), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       sim.publishV1Root(ss, d, root)
       val (drifted0, cutoff) = sim.driftedEmbeddings(ss, d)
       val drifted = drifted0.localCheckpoint()
@@ -1562,8 +1570,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val emb = graft.Tables.embeddings(ss, d)
         .select("vec_id", "embedding")
       val maxId = emb.agg(max("vec_id")).head().getLong(0)
@@ -1655,8 +1662,7 @@ object EventStream {
       // batch-delete root (ss30/ss31) and the shared append lifecycle
       // (ss26–ss29) are never perturbed
       val (root, cutoff) = sim.publishedIvfIndex(s, d, "_sdel")
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val delIds = graft.Tables.embeddings(ss, d)
         .filter(col("vec_id") % sim.TombMod === sim.TombRem)
         .select("vec_id")
@@ -1735,8 +1741,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val docs = graft.Tables.documents(ss, d)
       val keyed = docs.withColumn("ck", md5(col("text")))
       def slice(i: Int) =
@@ -1804,8 +1809,7 @@ object EventStream {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(root), true)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      val ss = streamSession(s, 8)
       val ev = graft.Tables.events(ss, d)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"))
       val m = ev.agg(max("event_id")).head().getLong(0) + 1

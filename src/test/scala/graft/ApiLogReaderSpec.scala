@@ -54,7 +54,7 @@ class ApiLogReaderSpec extends AnyFunSuite {
   }
 
   test("reading a 40-file corpus starts no Spark job") {
-    val dir = Files.createTempDirectory("graft_reader40_")
+    val dir = TestFiles.tempDir("graft_reader40_")
     for (cls <- Seq("clean", "virus"); i <- 0 until 20) {
       val d = Files.createDirectories(dir.resolve(s"${cls}_LOGS_CONVERTED"))
       Files.write(d.resolve(s"s$i.txt"), s"Api$i -\n".getBytes)

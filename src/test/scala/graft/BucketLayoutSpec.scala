@@ -18,7 +18,7 @@ class BucketLayoutSpec extends AnyFunSuite {
     val someBucket = lsh.select("bucket").limit(1).collect()(0).getLong(0)
 
     // write embeddings partitioned by an (illustrative) bucket column
-    val out = java.nio.file.Files.createTempDirectory("graft_bucket_").toString
+    val out = TestFiles.tempDir("graft_bucket_").toString
     Tables.embeddings(spark, d)
       .withColumn("bucket", pmod(col("vec_id"), lit(16)))
       .write.partitionBy("bucket").mode("overwrite").parquet(out)

@@ -13,7 +13,7 @@ class BucketedJoinSpec extends AnyFunSuite {
 
   test("bucketed fact-fact join plans without any Exchange") {
     val d = "/root/testdata/sf0.001"
-    val wh = java.nio.file.Files.createTempDirectory("graft_bucketed_")
+    val wh = TestFiles.tempDir("graft_bucketed_")
       .toString
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS ord_bucketed")

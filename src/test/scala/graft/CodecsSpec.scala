@@ -16,7 +16,7 @@ class CodecsSpec extends AnyFunSuite {
 
   test("written LIBSVM loads through Spark's builtin libsvm source") {
     val a = VirusPipeline.run(spark, dir, topN = 10, k = 2)
-    val out = java.nio.file.Files.createTempDirectory("graft_libsvm_").toString
+    val out = TestFiles.tempDir("graft_libsvm_").toString
     Codecs.writeLibSvm(FeatureSelection.libsvmRows(a.vectors),
       s"$out/LIBSVMOutput.txt")
     val back = spark.read.format("libsvm").option("numFeatures", "2")
@@ -32,7 +32,7 @@ class CodecsSpec extends AnyFunSuite {
 
   test("line-order recovery survives a multi-partition single-file read") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_mp_").toString
+    val out = TestFiles.tempDir("graft_mp_").toString
     val n = 20000
     // label encodes the line number, so recovered order is checkable
     val lines = (0 until n).map(i => s"$i.0 ${i % 97 + 1}:1")
@@ -52,7 +52,7 @@ class CodecsSpec extends AnyFunSuite {
   test("topFeatures codec round-trips with rank order (S4+P8)") {
     import spark.implicits._
     val a = VirusPipeline.run(spark, dir, topN = 10, k = 2)
-    val out = java.nio.file.Files.createTempDirectory("graft_tf_").toString
+    val out = TestFiles.tempDir("graft_tf_").toString
     Codecs.writeTopFeatures(a.top, s"$out/topFeatures.txt")
     val back = Codecs.readTopFeatures(
       spark.read.textFile(s"$out/topFeatures.txt"))

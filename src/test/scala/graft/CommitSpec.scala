@@ -14,7 +14,7 @@ class CommitSpec extends AnyFunSuite {
   import graft.io.Commit._
 
   private def tmpDir() =
-    java.nio.file.Files.createTempDirectory("graft_commit_").toString
+    TestFiles.tempDir("graft_commit_").toString
 
   test("writeMarker round-trips content and leaves no tmp behind") {
     val d = tmpDir()

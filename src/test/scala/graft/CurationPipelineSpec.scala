@@ -132,8 +132,7 @@ class CurationPipelineSpec extends AnyFunSuite {
     // route the pipeline's CC stage through reliable checkpoints (file
     // artifacts in the dir prove it ran) and change nothing about the
     // answer
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_cc_ck_").toString
+    val ckDir = TestFiles.tempDir("graft_cc_ck_").toString
     spark.conf.set("spark.graft.cc.checkpoint", s"reliable:$ckDir")
     try {
       val rel = CurationPipeline.run(spark, d)

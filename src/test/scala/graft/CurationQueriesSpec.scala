@@ -21,7 +21,7 @@ class CurationQueriesSpec extends AnyFunSuite {
     t.split(" ").filter(_.nonEmpty).toSeq
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cq").toString
+    val dir = TestFiles.tempDir("graft_cq").toString
     rows.map { case (id, t, l, src) => (id, t, l, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

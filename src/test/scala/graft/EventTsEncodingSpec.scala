@@ -26,7 +26,7 @@ class EventTsEncodingSpec extends AnyFunSuite {
   // 2024-03-01T00:00:00Z in ns, plus offsets crossing hour boundaries
   private val Base = 1709251200L * 1000000000L
   private def fixtureDirs(): (String, String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_ts_enc_")
+    val root = TestFiles.tempDir("graft_ts_enc_")
     val rows = Seq(
       (1L, Base, 7L, "click", 1.5, "{}"),
       (2L, Base + 59L * 60 * 1000000000L, 7L, "click", 2.0, "{}"),

@@ -202,7 +202,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .toDF("doc_a", "doc_b")
     val local = graft.dedup.Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+    val dir = TestFiles.tempDir("graft_cc_ckpt")
       .toString
     val reliable = graft.dedup.Dedup.connectedComponents(pairs,
         checkpoint = CheckpointStrategy.Reliable(dir))

@@ -59,7 +59,7 @@ class RenderParitySpec extends AnyFunSuite {
       .map(_.getString(0)))
 
   private def written(write: String => Unit): String = {
-    val f = Files.createTempFile("graft_render_", ".txt")
+    val f = TestFiles.tempFile("graft_render_", ".txt")
     write(f.toString)
     new String(Files.readAllBytes(f), UTF_8)
   }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 class Round10OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val d = "/root/testdata/sf0.001"
+  private val sf001 = d.stripSuffix("sf0.001") + "sf0.01"
   private def q(name: String) = SparkEntry.queries(name)(spark, d)
 
   import graft.apps.CurationIncremental
@@ -26,15 +27,13 @@ class Round10OpsSpec extends AnyFunSuite {
     val mid = docs.filter(col("doc_id") >= cutoff)
       .agg(expr("percentile_approx(doc_id, 0.5)")).head().getLong(0)
 
-    val root1 = java.nio.file.Files
-      .createTempDirectory("graft_incr_one").toString
+    val root1 = TestFiles.tempDir("graft_incr_one").toString
     CurationIncremental.curateBase(spark,
       docs.filter(col("doc_id") < cutoff), root1)
     CurationIncremental.applyDelta(spark, root1,
       docs.filter(col("doc_id") >= cutoff))
 
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft_incr_two").toString
+    val root2 = TestFiles.tempDir("graft_incr_two").toString
     CurationIncremental.curateBase(spark,
       docs.filter(col("doc_id") < cutoff), root2)
     CurationIncremental.applyDelta(spark, root2,
@@ -56,8 +55,7 @@ class Round10OpsSpec extends AnyFunSuite {
   test("st18's upsertDocBatch skips a replayed batch whose marker " +
     "already points at it (recovery replay is a no-op, not a crash)") {
     import graft.streaming.EventStream
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_upsert_replay").toString
+    val out = TestFiles.tempDir("graft_upsert_replay").toString
     val b0 = Tables.documents(spark, d)
       .select("doc_id", "text", "lang", "source")
       .withColumn("version", lit(1L)).limit(50)
@@ -87,8 +85,7 @@ class Round10OpsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
     val keyed = docs.withColumn("ck", md5(col("text")))
     def run(batches: Seq[DataFrame]): (String, Set[org.apache.spark.sql.Row]) = {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ingest").toString
+      val root = TestFiles.tempDir("graft_ingest").toString
       val out = s"$root/out"
       batches.zipWithIndex.foreach { case (b, i) =>
         assert(EventStream.ingestCurateBatch(spark, root, out,
@@ -313,8 +310,7 @@ class Round10OpsSpec extends AnyFunSuite {
     "old snapshot stays readable, and re-applying is idempotent") {
     import graft.apps.CurationIncremental
     val docs = Tables.documents(spark, d)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_regate").toString
+    val root = TestFiles.tempDir("graft_regate").toString
     CurationIncremental.curateBase(spark, docs, root)
     val v0 = CurationIncremental.published(spark, root).collect()
     CurationIncremental.regateQuality(spark, root, 0.36)
@@ -472,14 +468,30 @@ class Round10OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("dd22 runs 12 jobs at sf0.01, five times out of five") {
-    val sf001 = d.stripSuffix("sf0.001") + "sf0.01"
+  test("dd22 runs 11 jobs at sf0.01, five times out of five") {
     val jobs = (1 to 5).map { _ =>
       JobCount.of(spark)(
         SparkEntry.queries("dd22_span_ladder")(spark, sf001).collect())._2
     }
     info(s"dd22 at sf0.01 ran ${jobs.mkString(", ")} jobs")
-    assert(jobs == Seq.fill(5)(12))
+    assert(jobs == Seq.fill(5)(11))
+  }
+
+  test("curateBase then applyDelta run 55 jobs at sf0.01, three times " +
+    "out of three") {
+    val docs = Tables.documents(spark, sf001)
+    val cutoff = CurationIncremental.cutoffOf(docs)
+    val jobs = (1 to 3).map { i =>
+      val root = TestFiles.tempDir(s"graft_cu_jobs$i").toString
+      JobCount.of(spark) {
+        CurationIncremental.curateBase(spark,
+          docs.filter(col("doc_id") < cutoff), root)
+        CurationIncremental.applyDelta(spark, root,
+          docs.filter(col("doc_id") >= cutoff))
+      }._2
+    }
+    info(s"curateBase + applyDelta at sf0.01 ran ${jobs.mkString(", ")} jobs")
+    assert(jobs == Seq.fill(3)(55))
   }
 
   test("io21 rollback leaves BOTH snapshot versions on disk — " +
@@ -734,6 +746,17 @@ class Round10OpsSpec extends AnyFunSuite {
     merged.keys.foreach { c =>
       assert(full.contains(c), s"io22 must cover $c")
       assert(full(c) == merged(c), s"stats($c): ${full(c)} vs ${merged(c)}")
+    }
+  }
+
+  test("st23's streamed buffers equal io23's merged ones row for row " +
+    "at sf0.001 and sf0.01 (one merge law, batch and stream)") {
+    Seq(d, sf001).foreach { dir =>
+      def rows(name: String) =
+        SparkEntry.queries(name)(spark, dir).collect().toSeq
+      val streamed = rows("st23_stream_table_stats")
+      assert(streamed.length == 3)
+      assert(streamed == rows("io23_incremental_stats"))
     }
   }
 

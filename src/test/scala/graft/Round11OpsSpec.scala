@@ -24,7 +24,7 @@ class Round11OpsSpec extends AnyFunSuite {
     java.lang.Long.parseLong(md5hex(s).take(7), 16)
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r11").toString
+    val dir = TestFiles.tempDir("graft_r11").toString
     rows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite")
@@ -204,8 +204,7 @@ class Round11OpsSpec extends AnyFunSuite {
     import graft.apps.CurationIncremental
     val d = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, d)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cu04_replay").toString
+    val root = TestFiles.tempDir("graft_cu04_replay").toString
     CurationIncremental.curateBase(spark, docs, root)
     val wave = graft.operators.TextAnalysis
       .benchSample(docs, 2 * CurationIncremental.BenchN)
@@ -239,8 +238,7 @@ class Round11OpsSpec extends AnyFunSuite {
     "NULL-backfills base survivors, and is replay-safe") {
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_st24_replay").toString
+    val out = TestFiles.tempDir("graft_st24_replay").toString
     val docs0 = Tables.documents(spark, d)
       .select("doc_id", "text", "lang", "source")
     docs0.withColumn("version", lit(1L))

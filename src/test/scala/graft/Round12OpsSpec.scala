@@ -17,8 +17,7 @@ class Round12OpsSpec extends AnyFunSuite {
     "marker does not roll an extra version on replay") {
     import graft.apps.CurationIncremental
     val docs = Tables.documents(spark, d)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cu04_twophase").toString
+    val root = TestFiles.tempDir("graft_cu04_twophase").toString
     CurationIncremental.curateBase(spark, docs, root)
     val wave = graft.operators.TextAnalysis
       .benchSample(docs, 2 * CurationIncremental.BenchN)
@@ -57,8 +56,7 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(md5Long7("z" * CdcHashW) % CdcDiv != 0L)
     val wall = "´" * 600
     val flat = "z" * 600
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dd24_clamp").toString
+    val dir = TestFiles.tempDir("graft_dd24_clamp").toString
     Seq((1L, wall, "en", "web", 600L), (2L, flat, "en", "web", 600L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite")
@@ -361,8 +359,7 @@ class Round12OpsSpec extends AnyFunSuite {
       val f = math.max(1, 3000 / (i + 1))
       (i.toLong, Seq.fill(f)(word(i)).mkString(" "))
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_zipf_bpe").toString
+    val dir = TestFiles.tempDir("graft_zipf_bpe").toString
     docRows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite")

@@ -79,8 +79,7 @@ class Round13OpsSpec extends AnyFunSuite {
     "starts a fresh list") {
     import spark.implicits._
     val sim = graft.similarity.Similarity
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_st27_sink").toString
+    val root = TestFiles.tempDir("graft_st27_sink").toString
     val tomb = s"$root/_TOMB"
     // empty wave: short-circuits before any marker or file exists
     sim.appendTombstoneWave(spark,
@@ -246,8 +245,7 @@ class Round13OpsSpec extends AnyFunSuite {
     "a pure no-op: the applied-wave log survives the fold, so waves " +
     "never re-append and the fold never self-overwrites (full-suite " +
     "ordering bug, round 13)") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lifecycle_replay").toString
+    val root = TestFiles.tempDir("graft_lifecycle_replay").toString
     def served() = idxRows(
       graft.apps.IndexLifecycle.run(spark, d, root)
         .select(col("vec_id"), col("cell"), col("m"), col("code"),

@@ -16,7 +16,7 @@ class Round14OpsSpec extends AnyFunSuite {
   private val sim = graft.similarity.Similarity
   private def q(name: String) = SparkEntry.queries(name)(spark, d)
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestFiles.tempDir(prefix).toString
   private def marker(path: String) = graft.io.Commit.readMarker(spark, path)
 
   private def idxRows(df: org.apache.spark.sql.DataFrame) =

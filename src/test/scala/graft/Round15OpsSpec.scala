@@ -14,7 +14,7 @@ class Round15OpsSpec extends AnyFunSuite {
   private val d = "/root/testdata/sf0.001"
   private val sim = graft.similarity.Similarity
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestFiles.tempDir(prefix).toString
   private def marker(path: String) = graft.io.Commit.readMarker(spark, path)
 
   test("incremental drift monitor: the merged-stats readout equals the " +

@@ -15,7 +15,7 @@ class SpanLadderSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd22").toString
+    val dir = TestFiles.tempDir("graft_dd22").toString
     rows.map { case (id, t) =>
       (id, t, "en", "web", Option(t).map(_.codePointCount(0, t.length).toLong)) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -87,6 +87,26 @@ class SpanLadderSpec extends AnyFunSuite {
     assert(want.forall(_.getLong(1) > 0L))
     assert(want.head.getLong(2) == 4L)
     assert(dd22(writeDocs(docs)) == want)
+  }
+
+  test("dd22 folds a document's repeats: a window twice in one doc " +
+    "and once in another counts 2 docs, 3 occurrences, and its " +
+    "witness is the first position in the smaller doc_id") {
+    val w = "ABCDEFGHIJKLMNOP" // one width-16 window; every filler
+    // letter below occurs once in the corpus, so no other window of
+    // any width is shared
+    val docs = Seq(
+      7L -> ("ab" + w + "cdefghijkl" + w + "mn"), // at 3 and 29
+      4L -> ("opqrstuvw" + w + "xyz"))             // at 10
+    val election = graft.dedup.Dedup.crossDigests(spark,
+      docs.toDF("doc_id", "text")).collect().toSeq
+    assert(election == Seq(Row(16, 2L, 3L, 4L, 10)))
+    val got = dd22(writeDocs(docs))
+    assert(got == SpanLadder.map { width =>
+      if (width == 16) Row(16L, 1L, 2L, 3L, w)
+      else Row(width.toLong, 0L, 0L, 0L, null)
+    })
+    assert(got == bruteForce(docs, codePointWindows))
   }
 
   test("dd22 over an empty documents table: every width reads 0 with " +

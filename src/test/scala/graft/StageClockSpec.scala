@@ -60,8 +60,7 @@ class StageClockSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, d)
     val cutoff = CurationIncremental.cutoffOf(docs)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_stage_names").toString
+    val root = TestFiles.tempDir("graft_stage_names").toString
     val (stages, wall) = stagesOf { onStage =>
       CurationIncremental.curateBase(spark,
         docs.filter(col("doc_id") < cutoff), root, onStage = onStage)

@@ -23,7 +23,7 @@ class TableDriftSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def stage(name: String, df: DataFrame): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_drift_")
+    val root = TestFiles.tempDir("graft_drift_")
     val tmp = root.resolve("_write")
     df.coalesce(1).write.parquet(tmp.toString)
     val part = java.nio.file.Files.list(tmp).iterator().asScala

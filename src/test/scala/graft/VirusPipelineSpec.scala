@@ -15,7 +15,7 @@ class VirusPipelineSpec extends AnyFunSuite {
     new java.io.File("src/test/resources/tiny_api_logs").getAbsolutePath
 
   test("pipeline writes all four artifacts in reference formats") {
-    val out = java.nio.file.Files.createTempDirectory("graft_vp_").toString
+    val out = TestFiles.tempDir("graft_vp_").toString
     val a = VirusPipeline.run(spark, dir, topN = 10, k = 2)
     VirusPipeline.writeArtifacts(a, out)
 
@@ -52,7 +52,7 @@ class VirusPipelineSpec extends AnyFunSuite {
     // a private copy of the fixture: no plan cached by another test
     // serves it, so every job runs
     val copy = TestFiles.copyOf(TestFiles.tinyApiLogs).toString
-    val out = java.nio.file.Files.createTempDirectory("graft_vpjobs_").toString
+    val out = TestFiles.tempDir("graft_vpjobs_").toString
     val (a, runJobs) = JobCount.of(spark)(
       VirusPipeline.run(spark, copy, topN = 10, k = 2))
     val (_, writeJobs) = JobCount.of(spark)(
@@ -66,6 +66,26 @@ class VirusPipelineSpec extends AnyFunSuite {
     val total = runJobs + writeJobs + entropyJobs
     assert(total <= 29, s"run $runJobs + write $writeJobs + " +
       s"entropy $entropyJobs = $total jobs")
+  }
+
+  test("run leaves nothing cached once top, vectors and samples are released") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val persisted = sc.getPersistentRDDs.keySet
+    val a = VirusPipeline.run(spark, dir, topN = 10, k = 2)
+    // samples is the frame a caller gets when it assembles the vectors
+    val again = VirusPipeline.assemble(a.vectors, a.top.count().toInt)
+    assert(again.storageLevel.useMemory, "assemble(vectors) is not cached")
+    assert(again.collect().toSet == a.samples.collect().toSet)
+    a.top.unpersist(true)
+    a.vectors.unpersist(true)
+    a.samples.unpersist(true)
+    val cache = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "a frame cached by run is still in the cache")
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
+      s"run left persistent RDDs ${sc.getPersistentRDDs.keySet -- persisted}")
   }
 
   test("LIBSVM codec round-trips") {
@@ -85,7 +105,7 @@ class VirusPipelineSpec extends AnyFunSuite {
     // to feature selection, vector assembly, clustering seeds, or the
     // output codecs shows up here as a byte diff.
     assume(new java.io.File("/root/reference/api_logs").isDirectory)
-    val out = java.nio.file.Files.createTempDirectory("graft_golden_").toString
+    val out = TestFiles.tempDir("graft_golden_").toString
     val a = VirusPipeline.run(spark, "/root/reference/api_logs")
     VirusPipeline.writeArtifacts(a, out)
     def bytes(p: String) = java.nio.file.Files.readAllBytes(

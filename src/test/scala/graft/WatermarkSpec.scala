@@ -24,8 +24,7 @@ class WatermarkSpec extends AnyFunSuite {
       "readers see only committed batches") {
     import graft.streaming.EventStream.{commitBatch, committedIds, readCommitted}
     import spark.implicits._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_eo_spec").toString
+    val out = TestFiles.tempDir("graft_eo_spec").toString
     val schema = org.apache.spark.sql.types.StructType
       .fromDDL("id LONG, v STRING")
     def batch(tag: String, n: Int) =
