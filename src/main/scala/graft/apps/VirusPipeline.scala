@@ -29,7 +29,10 @@ import org.apache.spark.sql.types._
   *     rendered on the driver (P9/K3/K5/K6). These outputs are k×2
   *     counts plus one row per sample that their writers collect
   *     anyway; distributed, each pass paid their jobs and compiled
-  *     their generated classes again.
+  *     their generated classes again. The entropy score counts the
+  *     local assignments on the driver (no job), and the LIBSVM lines
+  *     render from the cached `samples`, whose sorted `indices` are
+  *     the lines' index lists (one scan, no aggregation).
   */
 object VirusPipeline {
 
@@ -150,31 +153,34 @@ object VirusPipeline {
   }
 
   /** A6/M3: global weighted-average label entropy of the clustering
-    * (`SVMDT.scala:264-284`), natural log. */
+    * (`SVMDT.scala:264-284`), natural log. The (cluster, label) pairs
+    * are collected and counted on the driver: over `run`'s local
+    * assignments frame that starts no job. */
   def entropyScore(assignments: DataFrame): Double =
     graft.functions.Funcs.weightedEntropy(
-      assignments.groupBy("cluster", "label").count().collect()
-        .map(r => (r.get(0), r.getLong(2))))
+      assignments.select("cluster", "label").collect()
+        .groupMapReduce(r => (r.get(0), r.get(1)))(_ => 1L)(_ + _)
+        .toSeq.map { case ((cluster, _), n) => (cluster, n) })
 
   /** Stage 3 — `driver` (SVMDT): the DT impurity×depth sweep scored on
     * the cv split and the LinearSVC reg sweep scored on the test split
     * (`MlPipeline.dtSweep`/`linearSweep` over `MlPipeline.seededSplit`,
     * U3), reported in the reference's console format
     * `"<param>, AUC = NN.NN%"` (`SVMDT.scala:160-163,195-197`). The
-    * splits are cached at the input's partitioning. */
+    * splits sample one sorted, cached parent at the input's
+    * partitioning (`MlPipeline.withSeededSplit`), released on return. */
   def classificationReport(spark: SparkSession, samples: DataFrame,
                            seed: Long = 42L): DataFrame = {
-    val splits = MlPipeline.seededSplit(samples, seed)
-    splits.foreach(_.cache().count()) // materialize before concurrent fits
-    val Array(train, cv, test) = splits
-    val dt = MlPipeline.dtSweep(train, cv, seed).map { case (imp, depth, auc) =>
-      (s"dt-$imp", depth.toDouble, auc,
-        f"$imp depth $depth, AUC = ${auc * 100}%2.2f%%")
+    val (dt, svc) = MlPipeline.withSeededSplit(samples, seed) {
+      case Array(train, cv, test) =>
+        (MlPipeline.dtSweep(train, cv, seed).map { case (imp, depth, auc) =>
+          (s"dt-$imp", depth.toDouble, auc,
+            f"$imp depth $depth, AUC = ${auc * 100}%2.2f%%")
+        },
+        MlPipeline.linearSweep(train, test, Seq("svc")).map { case (_, r, auc) =>
+          ("svc", r, auc, f"svc reg $r, AUC = ${auc * 100}%2.2f%%")
+        })
     }
-    val svc = MlPipeline.linearSweep(train, test, Seq("svc")).map {
-      case (_, r, auc) => ("svc", r, auc, f"svc reg $r, AUC = ${auc * 100}%2.2f%%")
-    }
-    splits.foreach(_.unpersist(false))
     import spark.implicits._
     (dt ++ svc).toDF("model", "param", "auc", "line")
   }
@@ -206,7 +212,8 @@ object VirusPipeline {
   def writeArtifacts(a: Artifacts, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
     Codecs.writeTopFeatures(a.top, s"$outDir/topFeatures.txt")
-    Codecs.writeLibSvm(FeatureSelection.libsvmRows(a.vectors),
+    Codecs.writeLibSvm(a.samples.select(col("sample_id"),
+        FeatureSelection.libsvmLine(col("label"), col("indices"))),
       s"$outDir/LIBSVMOutput.txt")
     Codecs.writeOutputTxt(a.assignments, s"$outDir/output.txt")
     Codecs.writeJson(a.json, s"$outDir/data.json")

@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   * through `KMeansRuns` ([[bestOfKMeans]], with `runs = 1` for a single
   * seeded fit, and [[kmeansCostSweep]]), which fits every (k, seed) run
   * in shared passes as Spark 1.x's `runs` did (`KMeans.setRuns` is gone
-  * in Spark 2+); [[seededSplit]] is the 50/25/25 split; [[dtSweep]] and
-  * [[linearSweep]] are the classifier sweeps. `SVMWithSGD` survives
+  * in Spark 2+); [[seededSplit]] is the 50/25/25 split, which every
+  * stage-3 caller takes through [[withSeededSplit]] (its three splits
+  * sample one sorted, cached parent, released when the caller's body
+  * returns or throws); [[dtSweep]] and [[linearSweep]] are the
+  * classifier sweeps. `SVMWithSGD` survives
   * only in RDD mllib, so its math is reproduced by the batched
   * [[sgdSweep]] (ml10). Every stochastic step is seeded (the reference
   * seeded nothing, so its published AUCs are one unreproducible draw).
@@ -38,7 +41,9 @@ import org.apache.spark.sql.functions._
   * data-distributed (per-iteration map + treeAggregate); feature
   * assembly here is one per-row `array_to_vector`, no shuffle. The
   * k-means runs and the SGD regularization grid are batched: one data
-  * pass per iteration serves every run. The DT and linear sweeps
+  * pass per iteration serves every run. The seeded split sorts and
+  * caches its input once ([[withSeededSplit]]), so its three splits
+  * neither re-read nor re-sort it. The DT and linear sweeps
   * dispatch their fits concurrently from the driver ([[inParallel]]),
   * each fit itself distributed; each caller chooses its splits'
   * partition layout, which the fits' arithmetic depends on.
@@ -219,25 +224,45 @@ object MlPipeline {
   }
 
   /** `trainWithParams` on a (label, features) frame (`SVMDT.scala:
-    * 92-95,204-214`): the seeded 50/25/25 split, [[sgdSweep]] on the
-    * train split (8 partitions, cached) and scored on the test split.
+    * 92-95,204-214`): the seeded 50/25/25 split ([[withSeededSplit]],
+    * whose parent is released on return), [[sgdSweep]] on the train
+    * split (8 partitions, cached) and scored on the test split.
     * Shared by `VirusPipeline.sgdReport` and ml10. */
   def sgdSplitSweep(data: DataFrame, seed: Long,
-      regParams: Seq[Double] = SgdRegParams): Seq[SgdPoint] = {
-    val Array(train0, _, test0) = seededSplit(data, seed)
-    def toRdd(df: DataFrame) = df.rdd.map { r =>
-      LabeledPoint(r.getDouble(0), OldVectors.fromML(
-        r.getAs[org.apache.spark.ml.linalg.Vector](1)))
+      regParams: Seq[Double] = SgdRegParams): Seq[SgdPoint] =
+    withSeededSplit(data, seed) { case Array(train0, _, test0) =>
+      def toRdd(df: DataFrame) = df.rdd.map { r =>
+        LabeledPoint(r.getDouble(0), OldVectors.fromML(
+          r.getAs[org.apache.spark.ml.linalg.Vector](1)))
+      }
+      val train = toRdd(train0).coalesce(8).cache()
+      try sgdSweep(train, toRdd(test0), regParams)
+      finally train.unpersist(false)
     }
-    val train = toRdd(train0).coalesce(8).cache()
-    try sgdSweep(train, toRdd(test0), regParams)
-    finally train.unpersist(false)
-  }
 
   /** U3: the reference's seeded 50/25/25 (train, cv, test) split of a
-    * frame's (label, features) columns (`SVMDT.scala:92-95`). */
+    * frame's (label, features) columns (`SVMDT.scala:92-95`).
+    * `randomSplit` sorts each input partition by every column before it
+    * samples, so each split re-reads and re-sorts the whole frame;
+    * stage 3 goes through [[withSeededSplit]] instead. */
   def seededSplit(data: DataFrame, seed: Long): Array[DataFrame] =
     data.select("label", "features").randomSplit(Array(0.5, 0.25, 0.25), seed)
+
+  /** [[seededSplit]] lent to `use`: the (label, features) frame is
+    * sorted within its partitions by exactly the keys `randomSplit`
+    * sorts by and cached once, so no split sorts again (Spark drops a
+    * sort its cached child already satisfies) and the three splits
+    * read the one cached parent: the same rows in the same partitions
+    * as `seededSplit(data, seed)`. The parent is unpersisted when
+    * `use` returns or throws; a split `use` caches is its own to
+    * release. */
+  def withSeededSplit[A](data: DataFrame, seed: Long)(
+      use: Array[DataFrame] => A): A = {
+    val parent = data.select("label", "features")
+      .sortWithinPartitions("label", "features").cache()
+    try use(seededSplit(parent, seed))
+    finally parent.unpersist(false)
+  }
 
   private def rocAuc(scored: DataFrame): Double =
     new BinaryClassificationEvaluator().setMetricName("areaUnderROC")
@@ -430,14 +455,16 @@ object MlPipeline {
     // `SVMDT.scala:92-95,147-164`).
     "ml03_dt_auc" -> ((s, d) => {
       // see ml04: small splits → few partitions, cheap per-fit jobs
-      val Array(train0, cv0, _) = seededSplit(labeled(s, d), Seed)
-      val train = train0.coalesce(8).cache()
-      val cv = cv0.coalesce(8).cache()
-      train.count(); cv.count() // materialize before concurrent fits
-      val rows = dtSweep(train, cv, Seed).map { case (imp, depth, auc) =>
-        (imp, depth, math.round(auc * 1e4) / 1e4)
+      val rows = withSeededSplit(labeled(s, d), Seed) { case Array(train0, cv0, _) =>
+        val train = train0.coalesce(8).cache()
+        val cv = cv0.coalesce(8).cache()
+        try {
+          train.count(); cv.count() // materialize before concurrent fits
+          dtSweep(train, cv, Seed).map { case (imp, depth, auc) =>
+            (imp, depth, math.round(auc * 1e4) / 1e4)
+          }
+        } finally { train.unpersist(false); cv.unpersist(false) }
       }
-      train.unpersist(false); cv.unpersist(false)
       import s.implicits._
       rows.toDF("impurity", "max_depth", "auc").orderBy("impurity", "max_depth")
     }),
@@ -465,14 +492,16 @@ object MlPipeline {
       // the splits are small relative to the cluster: coalesce to a
       // few partitions before caching so each of the ~100 tiny
       // iteration/eval jobs schedules 8 tasks, not shuffle.partitions
-      val Array(train0, _, test0) = seededSplit(labeled(s, d), Seed)
-      val train = train0.coalesce(8).cache()
-      val test = test0.coalesce(8).cache()
-      train.count(); test.count() // materialize before concurrent fits
-      val rows = linearSweep(train, test, Seq("svc", "lr")).map {
-        case (f, r, auc) => (f, r, math.round(auc * 1e4) / 1e4)
+      val rows = withSeededSplit(labeled(s, d), Seed) { case Array(train0, _, test0) =>
+        val train = train0.coalesce(8).cache()
+        val test = test0.coalesce(8).cache()
+        try {
+          train.count(); test.count() // materialize before concurrent fits
+          linearSweep(train, test, Seq("svc", "lr")).map {
+            case (f, r, auc) => (f, r, math.round(auc * 1e4) / 1e4)
+          }
+        } finally { train.unpersist(false); test.unpersist(false) }
       }
-      train.unpersist(false); test.unpersist(false)
       import s.implicits._
       rows.toDF("model", "reg_param", "auc").orderBy("model", "reg_param")
     }),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Funcs._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *     aggregates (reference A1, `:337`) — shrinks the shuffle; then
   *     the count is a partial+final HashAggregate (the `reduceByKey`
   *     shape at `:387`).
-  *   - [[infoGainRankedOfDistinct]]'s per-class join is on the token
-  *     vocabulary (small relative to the corpus); totals are a 1-row
-  *     broadcast.
+  *   - [[infoGainRankedOfDistinct]] counts both classes in ONE
+  *     aggregation over the token vocabulary (two conditional counts,
+  *     one shuffle); totals are a 1-row broadcast.
   *   - [[vectorizeOfDistinct]] replaces the reference's per-sample
   *     leftOuterJoin-per-file loop (`doesFeatureExist`, `:494-519`)
   *     with ONE broadcast semi-join of the corpus against the top-K
@@ -50,28 +50,35 @@ object FeatureSelection {
     distinct.groupBy("token", "cls").agg(count(lit(1)).as("n_docs"))
 
   /** M1+M2+P10+J1: information-gain ranking of the tokens of a
-    * [[distinctCalls]] table for a binary class split. `totals` is a
-    * single-row DataFrame `(p, t)` = (#positive samples, #all samples)
-    * — the reference's driver-side file counts
-    * (`FeatureSelectionCloud.scala:122-123`).
+    * [[distinctCalls]] table, `posCls` against the rest: `np` counts
+    * the samples of class `posCls` that hold the token, `nn` those of
+    * every other class. `totals` is a single-row DataFrame `(p, t)` =
+    * (#positive samples, #all samples) — the reference's driver-side
+    * file counts (`FeatureSelectionCloud.scala:122-123`).
     *
-    * Faithfully reproduces the J1 inner-join quirk
-    * (`FeatureSelectionCloud.scala:418`): tokens present in only one
-    * class are dropped before ranking. Gains are NaN→0
-    * (`replaceNaN`, `:392-399`) and rounded to 6 decimals so ranking
-    * ties are stable across engines. */
+    * Both counts come from one aggregation by token, the shape of
+    * `countFeatures` (`FeatureSelectionCloud.scala:376-390`) with its
+    * two per-class passes folded into conditional counts. Faithfully
+    * reproduces the J1 inner-join quirk (`:418`): a token present in
+    * only one class (`np = 0` or `nn = 0`) is dropped before ranking,
+    * as is a null token, which an equi-join never matches. With more
+    * than two classes the former per-class join emitted one row per
+    * token per non-positive class; here the rest is one class, which
+    * is the same thing for the binary splits every caller passes.
+    * Gains are NaN→0 (`replaceNaN`, `:392-399`) and rounded to 6
+    * decimals so ranking ties are stable across engines. */
   def infoGainRankedOfDistinct(distinct: DataFrame, posCls: String,
-                               totals: DataFrame): DataFrame = {
-    val df  = docFreqOfDistinct(distinct)
-    val pos = df.filter(col("cls") === posCls).select(col("token"), col("n_docs").as("np"))
-    val neg = df.filter(col("cls") =!= posCls).select(col("token"), col("n_docs").as("nn"))
-    pos.join(neg, Seq("token"), "inner")              // J1 — parity quirk
+                               totals: DataFrame): DataFrame =
+    distinct.filter(col("token").isNotNull)
+      .groupBy("token")
+      .agg(count_if(col("cls") === posCls).as("np"),
+           count_if(col("cls") =!= posCls).as("nn"))
+      .filter(col("np") > 0 && col("nn") > 0)      // J1 — parity quirk
       .crossJoin(broadcast(totals))
       .withColumn("info_gain",
         round(nanvl(infoGain(col("p"), col("t"), col("np") + col("nn"),
                              col("np")), lit(0.0)), 6))
       .select("token", "np", "nn", "info_gain")
-  }
 
   /** O1+O3: top-K by gain with a 1-based rank (`feature_index`).
     * `takeOrdered` + per-sample `zipWithIndex` in the reference
@@ -114,8 +121,12 @@ object FeatureSelection {
   def libsvmRows(vectors: DataFrame): DataFrame =
     vectors.groupBy("sample_id", "label")
       .agg(sort_array(collect_list(col("feature_index"))).as("idxs"))
-      .select(col("sample_id"),
-        concat(col("label").cast("int").cast("string"), lit(" "),
-          array_join(transform(col("idxs"),
-            i => concat(i.cast("string"), lit(":1"))), " ")).as("libsvm_row"))
+      .select(col("sample_id"), libsvmLine(col("label"), col("idxs")))
+
+  /** One LIBSVM line, `libsvm_row`, from a 0/1 label and its ascending
+    * 1-based feature indices. */
+  def libsvmLine(label: Column, idxs: Column): Column =
+    concat(label.cast("int").cast("string"), lit(" "),
+      array_join(transform(idxs,
+        i => concat(i.cast("string"), lit(":1"))), " ")).as("libsvm_row")
 }

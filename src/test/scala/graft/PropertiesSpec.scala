@@ -23,6 +23,25 @@ class PropertiesSpec extends AnyFunSuite {
   private val corpus = Gen.nonEmptyListOf(sample).map(_.take(8).zipWithIndex
     .map { case ((cls, toks), i) => (s"s$i", cls, toks) })
 
+  /** The former `infoGainRankedOfDistinct`, kept as the reference:
+    * document frequencies per (token, class), the positive class's
+    * inner-joined to the rest's (J1), then the gain. */
+  private def infoGainByJoin(distinct: org.apache.spark.sql.DataFrame,
+      posCls: String, totals: org.apache.spark.sql.DataFrame) = {
+    val df  = FeatureSelection.docFreqOfDistinct(distinct)
+    val pos = df.filter(col("cls") === posCls).select(col("token"), col("n_docs").as("np"))
+    val neg = df.filter(col("cls") =!= posCls).select(col("token"), col("n_docs").as("nn"))
+    pos.join(neg, Seq("token"), "inner")
+      .crossJoin(broadcast(totals))
+      .withColumn("info_gain",
+        round(nanvl(Funcs.infoGain(col("p"), col("t"), col("np") + col("nn"),
+                                   col("np")), lit(0.0)), 6))
+      .select("token", "np", "nn", "info_gain")
+  }
+
+  private def byToken(df: org.apache.spark.sql.DataFrame) =
+    df.collect().sortBy(_.getString(0)).toSeq
+
   private def runProp(p: Prop): Unit = {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(12), p)
@@ -51,6 +70,14 @@ class PropertiesSpec extends AnyFunSuite {
       val gainOk = ranked.forall { r =>
         val g = r.getDouble(3); g >= 0.0 && g <= 1.0
       }
+      // one aggregation with two conditional counts equals the former
+      // two aggregations + inner join, row for row: on the corpus
+      // (where tokens of one class only are common) and on it without
+      // its positive class
+      val noPos = distinct.filter(col("cls") =!= "virus")
+      val joinOk = Seq(distinct, noPos).forall(d =>
+        byToken(FeatureSelection.infoGainRankedOfDistinct(d, "virus", totals)) ==
+          byToken(infoGainByJoin(d, "virus", totals)))
 
       val top = FeatureSelection.topFeatures(
         FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals), 5)
@@ -66,7 +93,7 @@ class PropertiesSpec extends AnyFunSuite {
       val rowsOk = rows.length <= cs.size &&
         rows.forall(_.getString(1).matches("[01]( \\d+:1)+"))
 
-      dfOk && gainOk && vecOk && rowsOk
+      dfOk && gainOk && joinOk && vecOk && rowsOk
     })
   }
 

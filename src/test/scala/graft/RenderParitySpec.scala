@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The driver-side renderers of the stage-1/2 artifacts against the
   * distributed forms they replaced, kept here as oracles: Spark's
   * `collect_list` nesting + `to_json` for `data.json`, and `orderBy` +
-  * `collect` for each writer. Identical bytes on the tiny fixture and
+  * `collect` for each writer, and `libsvmRows` over the long-form
+  * vectors for the LIBSVM file `writeArtifacts` renders from the
+  * assembled samples. Identical bytes on the tiny fixture and
   * on adversarial rows (JSON escapes, non-ASCII and supplementary
   * characters, cluster ids ≥ 10). */
 class RenderParitySpec extends AnyFunSuite {
@@ -65,10 +67,16 @@ class RenderParitySpec extends AnyFunSuite {
   }
 
   private def assertSameBytes(top: DataFrame, vectors: DataFrame,
-                              assignments: DataFrame): Unit = {
+                              samples: DataFrame, assignments: DataFrame): Unit = {
     assert(written(Codecs.writeTopFeatures(top, _)) == orderedTop(top))
     val libsvm = FeatureSelection.libsvmRows(vectors)
     assert(written(Codecs.writeLibSvm(libsvm, _)) == orderedLibSvm(libsvm))
+    // writeArtifacts renders the LIBSVM lines from the assembled samples
+    val out = TestFiles.tempDir("graft_render_")
+    VirusPipeline.writeArtifacts(VirusPipeline.Artifacts(top, vectors,
+      samples, assignments, spark.emptyDataFrame, ""), out.toString)
+    assert(new String(Files.readAllBytes(out.resolve("LIBSVMOutput.txt")),
+      UTF_8) == orderedLibSvm(libsvm))
     assert(written(Codecs.writeOutputTxt(assignments, _)) ==
       orderedOutput(assignments))
     assert(Hierarchy.d3Json(assignments.collect().toSeq) ==
@@ -78,7 +86,7 @@ class RenderParitySpec extends AnyFunSuite {
   test("tiny fixture: driver renderers equal the distributed forms") {
     val a = VirusPipeline.run(spark, TestFiles.tinyApiLogs.toString,
       topN = 10, k = 2)
-    assertSameBytes(a.top, a.vectors, a.assignments)
+    assertSameBytes(a.top, a.vectors, a.samples, a.assignments)
     assert(a.json == toJsonNesting(a.assignments))
     // the apis leaves equal the former vec ⋈ top join + collect_list
     val n = a.top.count()
@@ -137,6 +145,7 @@ class RenderParitySpec extends AnyFunSuite {
     val vectors = shuffled
       .flatMap { case (_, l, s, idx) => idx.map(i => (s, l, i + 1)) }
       .toDF("sample_id", "label", "feature_index").repartition(3)
-    assertSameBytes(top, vectors, assignments)
+    assertSameBytes(top, vectors,
+      VirusPipeline.assemble(vectors, names.size), assignments)
   }
 }

@@ -4,8 +4,13 @@ import graft.apps.VirusPipeline
 import graft.ml.MlPipeline
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, LogisticRegression}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{SQLDataTypes, Vectors}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,8 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `VirusPipeline.classificationReport` against the sequential fit
   * loops the report ran before, which live on here only as the oracle:
   * the same AUCs, compared with `==`, and the same report lines, on a
-  * seeded, labeled sparse frame. */
-class Stage3SweepSpec extends AnyFunSuite {
+  * seeded, labeled sparse frame. `MlPipeline.withSeededSplit` is held
+  * to `randomSplit` on the unsorted frame, and its plans and its
+  * release of the parent are locked. */
+class Stage3SweepSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
   private val Seed = 42L
@@ -125,5 +132,79 @@ class Stage3SweepSpec extends AnyFunSuite {
     val Array(train, _, test) = MlPipeline.seededSplit(samples, Seed)
     intercept[IllegalArgumentException](
       MlPipeline.linearSweep(train, test, Seq("svm")))
+  }
+
+  /** ml10's shape: dense embeddings as vectors, label 1.0 for classes
+    * 0-4 and 0.0 for 5-9, over 5 partitions, not cached. */
+  private lazy val embeddingsLike: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 300).map(i =>
+      (i % 10, Array.fill(16)(rnd.nextGaussian().toFloat)))
+    spark.sparkContext.parallelize(rows, 5).toDF("class", "embedding")
+      .select(when(col("class") < 5, 1.0).otherwise(0.0).as("label"),
+        array_to_vector(col("embedding")).as("features"))
+  }
+
+  /** Each row of a frame with the index of the partition it is in. */
+  private def byPartition(df: DataFrame): Seq[(Int, Row)] =
+    df.rdd.mapPartitionsWithIndex((i, rows) => rows.map(r => (i, r)))
+      .collect().toSeq
+
+  private def sorts(df: DataFrame): Seq[SortExec] =
+    collect(df.queryExecution.executedPlan) { case s: SortExec => s }
+
+  for ((name, frame) <- Seq[(String, () => DataFrame)](
+      "virus-shaped" -> (() => samples), "ml10-shaped" -> (() => embeddingsLike)))
+    test(s"withSeededSplit on the $name frame: randomSplit's rows, no second sort") {
+      val data = frame()
+      val plain = MlPipeline.seededSplit(data, Seed)
+      val expected = plain.toSeq.map(byPartition)
+      assert(expected.forall(_.nonEmpty))
+      // randomSplit sorts each partition of an unsorted frame
+      assert(plain.forall(sorts(_).nonEmpty))
+      MlPipeline.withSeededSplit(data, Seed) { splits =>
+        assert(splits.toSeq.map(byPartition) == expected)
+        splits.foreach { split =>
+          val plan = split.queryExecution.executedPlan
+          assert(sorts(split).isEmpty, s"a split sorts its cached parent again:\n$plan")
+          assert(collect(plan) { case c: InMemoryTableScanExec => c }.nonEmpty,
+            s"a split does not read the cached parent:\n$plan")
+        }
+      }
+    }
+
+  test("withSeededSplit releases its parent when the body throws") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached(df: DataFrame) = cache.lookupCachedData(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    // the frame withSeededSplit caches
+    val parent = samples.select("label", "features")
+      .sortWithinPartitions("label", "features")
+    val sc = spark.sparkContext
+    samples.count()
+    val persisted = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      MlPipeline.withSeededSplit(samples, Seed) { splits =>
+        splits.head.count() // fills the parent's cache
+        assert(cached(parent))
+        assert(sc.getPersistentRDDs.size == persisted.size + 1)
+        throw new IllegalStateException("fit failed")
+      }
+    }
+    assert(e.getMessage == "fit failed")
+    assert(!cached(parent), "the split's parent is still cached")
+    assert(cached(samples), "releasing the parent released its input")
+    assert(sc.getPersistentRDDs.keySet == persisted,
+      s"persistent RDDs left: ${sc.getPersistentRDDs.keySet -- persisted}")
+  }
+
+  test("classificationReport stays within its job count") {
+    samples.count()
+    val (_, jobs) = JobCount.of(spark)(
+      VirusPipeline.classificationReport(spark, samples, Seed))
+    // 19 fits and their scoring, over splits of one cached parent
+    assert(jobs <= 353, s"classificationReport ran $jobs jobs")
   }
 }

@@ -59,12 +59,12 @@ class VirusPipelineSpec extends AnyFunSuite {
       VirusPipeline.writeArtifacts(a, out))
     val (_, entropyJobs) = JobCount.of(spark)(
       VirusPipeline.entropyScore(a.assignments))
-    // the writers collect top and the LIBSVM rows; output.txt and
-    // data.json render from local frames
-    assert(writeJobs <= 3, s"writeArtifacts ran $writeJobs jobs")
-    assert(entropyJobs <= 2, s"entropyScore ran $entropyJobs jobs")
+    // the writers collect top and the cached samples' LIBSVM lines;
+    // output.txt, data.json and the entropy read local frames
+    assert(writeJobs <= 2, s"writeArtifacts ran $writeJobs jobs")
+    assert(entropyJobs == 0, s"entropyScore ran $entropyJobs jobs")
     val total = runJobs + writeJobs + entropyJobs
-    assert(total <= 29, s"run $runJobs + write $writeJobs + " +
+    assert(total <= 23, s"run $runJobs + write $writeJobs + " +
       s"entropy $entropyJobs = $total jobs")
   }
 
