@@ -59,7 +59,7 @@ object Bench {
       val secs = if (ok) clock.elapsed else -1.0
       val all = windows.map(_._2) :+ window()
       val total = Timing.Window(all.map(_.jobs).sum, all.map(_.gcMs).sum,
-        all.map(_.peakBytes).max)
+        all.map(_.peakBytes).max, all.map(_.compiles).sum)
       Rows((name -> secs) +: stages.toSeq,
         (name -> total.gcMs) +: windows.toSeq.map { case (k, w) => k -> w.gcMs },
         (name -> total.peakMb) +: windows.toSeq.map { case (k, w) => k -> w.peakMb })

@@ -4,8 +4,9 @@ import graft.export.Hierarchy
 import graft.io.{ApiLogReader, Codecs}
 import graft.ml.MlPipeline
 import graft.operators.FeatureSelection
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF2
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,7 +17,15 @@ import org.apache.spark.sql.types._
   * `FeatureSelectionCloud`/`Clustering`/`driver` runs this instead.
   *
   * Key rewrites vs the reference (SURVEY §4.2):
-  *   - no per-sample jobs: one corpus scan, one broadcast semi-join;
+  *   - no per-sample jobs: one corpus scan; stage 1's top-N (≤ topN
+  *     rows) is collected once, and the driver keeps it: the token
+  *     list, the local `top` frame and the token → rank map that
+  *     vectorizes every distinct call (no join, no broadcast) all come
+  *     from those rows. Nothing of stage 1 but the deduplicated calls
+  *     is cached, and they are released once the k-means fit has
+  *     filled `samples`; the vectorization runs inside the fit's first
+  *     job, so stage 1's clock stops at the collect and the fit's
+  *     stage carries the vectorization;
   *   - cluster assignments join on `sample_id`, never positional `zip`
   *     (J3, `KmeansVirus.scala:123-125`);
   *   - no toString/regex reparse of sparse vectors (P7): the 1-based
@@ -29,18 +38,28 @@ import org.apache.spark.sql.types._
   *     rendered on the driver (P9/K3/K5/K6). These outputs are k×2
   *     counts plus one row per sample that their writers collect
   *     anyway; distributed, each pass paid their jobs and compiled
-  *     their generated classes again. The entropy score counts the
-  *     local assignments on the driver (no job), and the LIBSVM lines
-  *     render from the cached `samples`, whose sorted `indices` are
-  *     the lines' index lists (one scan, no aggregation).
+  *     their generated classes again. The samples are assigned on
+  *     the driver by the model's `predict` (no `transform` job), the
+  *     entropy score counts the local assignments on the driver (no
+  *     job), and the LIBSVM lines render from the cached `samples`,
+  *     whose sorted `indices` are the lines' index lists (one scan,
+  *     no aggregation);
+  *   - a pass compiles few generated classes, so that Spark's codegen
+  *     cache (100 entries by default, in four LRU segments of 25,
+  *     keyed by class loader and code) holds all of them and a
+  *     repeated pass compiles none: the driver-side reads of the
+  *     pass's local frames and of `samples` share their row codecs,
+  *     and the UDFs take the Java form, which compiles no argument
+  *     decoder (VirusPipelineSpec locks ≤ 60 classes, then 0).
   */
 object VirusPipeline {
 
-  /** `assignments` and `clusterReport` are local frames, `json` is the
-    * rendered `data.json`; `top`, `vectors` and `samples` (the fit's
-    * input, `assemble(vectors, top.count)`, so a caller that assembles
-    * the vectors again reads it) are cached until the caller releases
-    * them. */
+  /** `top`, `assignments` and `clusterReport` are local frames,
+    * `json` is the rendered `data.json`; `vectors` is the
+    * vectorization's plan over the released deduplicated calls, and
+    * `samples` (the fit's input, `assemble(vectors, top.count)`, so a
+    * caller that assembles the vectors again reads it) is cached until
+    * the caller releases it. */
   final case class Artifacts(top: DataFrame, vectors: DataFrame,
       samples: DataFrame, assignments: DataFrame, clusterReport: DataFrame,
       json: String)
@@ -53,6 +72,15 @@ object VirusPipeline {
       StructField("name", StringType),
       StructField("size", IntegerType)))))))
 
+  private val topSchema = StructType(Seq(
+    StructField("feature_index", IntegerType, nullable = false),
+    StructField("token", StringType),
+    StructField("info_gain", DoubleType)))
+
+  private val sgdSchema = StructType(Seq(
+    StructField("reg_param", DoubleType, nullable = false),
+    StructField("auc", DoubleType, nullable = false)))
+
   private val reportSchema = StructType(Seq(
     StructField("line", StringType),
     StructField("cluster", IntegerType),
@@ -64,10 +92,17 @@ object VirusPipeline {
 
   /** Sparse binary vector assembly (§2.9): 1-based ranks → 0-based
     * MLlib indices, presence-only values. */
+  private def sparseOf(n: Int, idxs: Seq[Int]): Vector =
+    Vectors.sparse(n, idxs.sorted.map(_ - 1).toArray,
+      Array.fill(idxs.size)(1.0))
+
+  /** [[sparseOf]] as a column function, in the Java form: its array
+    * argument is converted as is, where a typed Scala UDF compiles a
+    * generated decoder for it and an encoder for its vector. */
   private val toSparse =
-    udf((n: Int, idxs: Seq[Int]) =>
-      Vectors.sparse(n, idxs.sorted.map(_ - 1).toArray,
-        Array.fill(idxs.size)(1.0)))
+    udf(new UDF2[Int, Seq[Int], Vector] {
+      def call(n: Int, idxs: Seq[Int]): Vector = sparseOf(n, idxs)
+    }, SQLDataTypes.VectorType)
 
   /** Long-form vectors → (sample_id, label, indices, features) with an
     * ML SparseVector column. */
@@ -77,12 +112,12 @@ object VirusPipeline {
       .withColumn("features", toSparse(lit(nFeatures), col("indices")))
 
   /** @param onStage stage-attribution callback (round-6 verdict #1):
-    *   called at each stage boundary with (name, seconds). The
-    *   boundaries force the stage's cached frame, which the next
-    *   stage would materialize anyway — same total work, attributable
-    *   wall-clock. Bench feeds these into `pipeline_virus_s*` rows so
-    *   a per-round series can name the stage that diverges instead of
-    *   one opaque e2e number. */
+    *   called at each stage boundary with (name, seconds):
+    *   `s1_features` once the top-N is collected, `s2_cluster` once
+    *   the fit (with the vectorization and `samples`' fill) and the
+    *   driver-side renders are done. Bench feeds these into
+    *   `pipeline_virus_s*` rows so a per-round series can name the
+    *   stage that diverges instead of one opaque e2e number. */
   def run(spark: SparkSession, apiLogsDir: String, topN: Int = 2000,
           k: Int = 10, seed: Long = 42L, runs: Int = 10,
           onStage: (String, Double) => Unit = (_, _) => ()): Artifacts = {
@@ -100,25 +135,25 @@ object VirusPipeline {
     val totals = ApiLogReader.totalsOf(raw, "virus")
     val distinct = FeatureSelection.distinctCalls(
       ApiLogReader.callsOf(raw)).cache()
-    val ranked = FeatureSelection.infoGainRankedOfDistinct(
-      distinct, "virus", totals)
-    val top = FeatureSelection.topFeatures(ranked, topN).cache()
-    val vec = FeatureSelection.vectorizeOfDistinct(distinct, top, "virus")
-      .cache()
-    // the token of each 1-based rank; this collect fills top's cache
-    val tokens = top.select("feature_index", "token").collect()
-      .sortBy(_.getInt(0)).map(_.getString(1))
+    // the top-N (≤ topN rows) collected once, in rank order; this job
+    // fills distinct's cache. The token list, the local `top` frame
+    // and the rank map the vectorization looks tokens up in all come
+    // from these rows: neither `top` nor the vectors are cached, and
+    // no broadcast join ships the top-N back to the tasks.
+    val topRows = FeatureSelection.collectTopFeatures(
+      FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals),
+      topN)
+    val tokens = topRows.map(_._2).toIndexedSeq
     val nFeatures = tokens.length
-    vec.count() // boundary: stage-2 reads the populated cache
-    // top/vec are materialized; nothing downstream re-reads the
-    // dedup'd calls — release it before clustering
-    distinct.unpersist(false)
+    val top = local(spark, topRows.map(Row.fromTuple), topSchema)
+    val vec = FeatureSelection.vectorizeOfDistinct(distinct, topRows, "virus")
     clock.done("s1_features")
 
     // stage 2 — clustering (KmeansVirus): sparse vectors per sample
     // cached for the fit, the assignments below and callers'
     // `assemble(a.vectors, n)`, and returned so they can release it;
-    // the fit's first job (its instance count) fills the cache
+    // the fit's first job (its instance count) fills the cache, the
+    // vectorization running inside it
     val samples = assemble(vec, nFeatures).cache()
     // L1 setRuns parity: the reference trains with `setRuns(10)`
     // (`KmeansVirus.scala:183-186`) — the best of `runs` seeded fits by
@@ -126,17 +161,23 @@ object VirusPipeline {
     // runs were
     val model = MlPipeline.bestOfKMeans(samples, k, runs,
       baseSeed = seed)
-    // ONE collect of the assignments (J3 done right: the prediction
-    // rides its own sample's row, never a positional zip); every
-    // stage-2/3 output below is rendered from these rows.
+    // samples is filled; nothing reads the dedup'd calls again
+    distinct.unpersist(false)
+    // ONE collect of the samples, each assigned on the driver by the
+    // model's own `predict` (the function `transform` applies per row)
+    // on its vector rebuilt from `indices` (the vector `toSparse` made
+    // from them); every stage-2/3 output below is rendered from these
+    // rows (J3 done right: the prediction rides its own sample's row,
+    // never a positional zip). The columns are read in the order the
+    // LIBSVM writer's scan reads them (by name), so both reads use one
+    // generated column reader.
     // P9: api leaf {name, size} with size = totalFeatures − 0-based
     // rank (`KmeansVirus.scala:106-111`), in rank order
-    val rows = model.transform(samples)
-      .select(col("prediction").cast("int"), col("label"), col("sample_id"),
-        col("indices"))
-      .collect().toSeq.map { r =>
-        Row(r.getInt(0), r.getDouble(1), r.getString(2),
-          r.getSeq[Int](3).map(i => Row(tokens(i - 1), nFeatures - (i - 1))))
+    val rows = samples.select("indices", "label", "sample_id").collect()
+      .toSeq.map { r =>
+        val idxs = r.getSeq[Int](0)
+        Row(model.predict(sparseOf(nFeatures, idxs)), r.getDouble(1),
+          r.getString(2), idxs.map(i => Row(tokens(i - 1), nFeatures - (i - 1))))
       }
     // A4+O4+K6: "Cluster N contains C L files" report rows
     val report = rows
@@ -154,11 +195,14 @@ object VirusPipeline {
 
   /** A6/M3: global weighted-average label entropy of the clustering
     * (`SVMDT.scala:264-284`), natural log. The (cluster, label) pairs
-    * are collected and counted on the driver: over `run`'s local
-    * assignments frame that starts no job. */
+    * are counted on the driver from the `output.txt` rows of the
+    * assignments ([[Codecs.outputTxtLines]], which `writeArtifacts`
+    * collects too): over `run`'s local assignments frame that starts
+    * no job, and the two reads share one generated row encoder and
+    * decoder instead of compiling a pair per projection. */
   def entropyScore(assignments: DataFrame): Double =
     graft.functions.Funcs.weightedEntropy(
-      assignments.select("cluster", "label").collect()
+      Codecs.outputTxtLines(assignments).collect()
         .groupMapReduce(r => (r.get(0), r.get(1)))(_ => 1L)(_ + _)
         .toSeq.map { case ((cluster, _), n) => (cluster, n) })
 
@@ -202,10 +246,9 @@ object VirusPipeline {
     * VirusPipelineSpec asserts the published bands on this report. */
   def sgdReport(spark: SparkSession, samples: DataFrame,
                 seed: Long = 42L): DataFrame = {
-    val rows = MlPipeline.sgdSplitSweep(samples, seed)
-      .map(p => (p.regParam, p.auc))
-    import spark.implicits._
-    rows.sortBy(_._1).toDF("reg_param", "auc") // driver-side: no sort job
+    local(spark, MlPipeline.sgdSplitSweep(samples, seed)
+      .map(p => Row(p.regParam, p.auc))
+      .sortBy(_.getDouble(0)), sgdSchema) // driver-side: no sort job
   }
 
   /** Writes the reference's four file artifacts. */

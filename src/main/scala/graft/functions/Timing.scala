@@ -20,9 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    `onStage` callback, so a verb's stages are contiguous and sum to
   *    its wall time; `GRAFT_TIMING=1` also prints them.
   *  - [[listen]] attaches the one `SparkListener`: it counts the jobs,
-  *    the task GC milliseconds and the largest task peak execution
-  *    memory of each window between two `window()` calls. The test
-  *    helper `JobCount` and `graft.Bench`'s gc/peak columns read it.
+  *    the task GC milliseconds, the largest task peak execution memory
+  *    and the generated classes compiled in each window between two
+  *    `window()` calls. The test helper `JobCount` and `graft.Bench`'s
+  *    gc/peak columns read it.
   *  - [[quiesce]] waits until Spark's asynchronous listener bus has
   *    delivered every event posted so far, so a window's counters hold
   *    exactly the work that ran inside it.
@@ -73,8 +74,11 @@ object Timing {
   }
 
   /** One window's counters: jobs started, GC milliseconds charged to
-    * its tasks, and the largest single-task peak execution memory. */
-  final case class Window(jobs: Int, gcMs: Long, peakBytes: Long) {
+    * its tasks, the largest single-task peak execution memory, and the
+    * classes Janino compiled in the whole JVM, driver and tasks alike
+    * (a class served from Spark's codegen cache is not compiled). */
+  final case class Window(jobs: Int, gcMs: Long, peakBytes: Long,
+      compiles: Long) {
     def peakMb: Double = math.rint(peakBytes / 1048576.0 * 10) / 10
   }
 
@@ -84,6 +88,7 @@ object Timing {
     private val jobs = new AtomicInteger()
     private val gcMs = new AtomicLong()
     private val peak = new AtomicLong()
+    private val compiled = new AtomicLong(compileCount())
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet(); ()
@@ -101,7 +106,9 @@ object Timing {
       * window (or since [[listen]]) and start the next window. */
     def window(): Window = {
       quiesce(spark)
-      Window(jobs.getAndSet(0), gcMs.getAndSet(0), peak.getAndSet(0))
+      val c = compileCount()
+      Window(jobs.getAndSet(0), gcMs.getAndSet(0), peak.getAndSet(0),
+        c - compiled.getAndSet(c))
     }
 
     def close(): Unit = spark.sparkContext.removeSparkListener(this)
@@ -115,6 +122,12 @@ object Timing {
     spark.sparkContext.addSparkListener(l)
     l
   }
+
+  /** Janino compiles in this JVM so far: every `CodeGenerator` cache
+    * miss records its compile time in this histogram. */
+  private def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
 
   /** Wait (at most 10 s, then throw) until the listener bus has
     * delivered every posted event. The bus is private to Spark, hence

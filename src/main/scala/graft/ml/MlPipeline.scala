@@ -9,13 +9,16 @@ import org.apache.spark.ml.clustering.{KMeansModel, KMeansRuns}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.mllib.classification.SVMModel
-import org.apache.spark.mllib.linalg.{Vector => OldVector, Vectors => OldVectors}
+import org.apache.spark.mllib.linalg.{DenseVector => OldDenseVector,
+  SparseVector => OldSparseVector, Vector => OldVector, Vectors => OldVectors}
 import org.apache.spark.mllib.optimization.{HingeGradient, SquaredL2Updater}
 import org.apache.spark.mllib.regression.LabeledPoint
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.random.BernoulliCellSampler
 
 /** The reference's ML stages (SURVEY.md §2.8, L1-L8) on `spark.ml`,
   * bound to the `embeddings` table.
@@ -25,11 +28,12 @@ import org.apache.spark.sql.functions._
   * through `KMeansRuns` ([[bestOfKMeans]], with `runs = 1` for a single
   * seeded fit, and [[kmeansCostSweep]]), which fits every (k, seed) run
   * in shared passes as Spark 1.x's `runs` did (`KMeans.setRuns` is gone
-  * in Spark 2+); [[seededSplit]] is the 50/25/25 split, which every
-  * stage-3 caller takes through [[withSeededSplit]] (its three splits
-  * sample one sorted, cached parent, released when the caller's body
-  * returns or throws); [[dtSweep]] and [[linearSweep]] are the
-  * classifier sweeps. `SVMWithSGD` survives
+  * in Spark 2+); [[seededSplit]] is the 50/25/25 split, which the DT
+  * and linear stage-3 callers take through [[withSeededSplit]] (its
+  * three splits sample one sorted, cached parent, released when the
+  * caller's body returns or throws) and [[sgdSplitSweep]] draws on the
+  * RDD side with randomSplit's own samplers; [[dtSweep]] and
+  * [[linearSweep]] are the classifier sweeps. `SVMWithSGD` survives
   * only in RDD mllib, so its math is reproduced by the batched
   * [[sgdSweep]] (ml10). Every stochastic step is seeded (the reference
   * seeded nothing, so its published AUCs are one unreproducible draw).
@@ -42,8 +46,8 @@ import org.apache.spark.sql.functions._
   * assembly here is one per-row `array_to_vector`, no shuffle. The
   * k-means runs and the SGD regularization grid are batched: one data
   * pass per iteration serves every run. The seeded split sorts and
-  * caches its input once ([[withSeededSplit]]), so its three splits
-  * neither re-read nor re-sort it. The DT and linear sweeps
+  * caches its input once ([[withSeededSplit]], [[sgdSplitSweep]]), so
+  * its splits neither re-read nor re-sort it. The DT and linear sweeps
   * dispatch their fits concurrently from the driver ([[inParallel]]),
   * each fit itself distributed; each caller chooses its splits'
   * partition layout, which the fits' arithmetic depends on.
@@ -224,21 +228,84 @@ object MlPipeline {
   }
 
   /** `trainWithParams` on a (label, features) frame (`SVMDT.scala:
-    * 92-95,204-214`): the seeded 50/25/25 split ([[withSeededSplit]],
-    * whose parent is released on return), [[sgdSweep]] on the train
-    * split (8 partitions, cached) and scored on the test split.
-    * Shared by `VirusPipeline.sgdReport` and ml10. */
+    * 92-95,204-214`): the seeded 50/25/25 split's train and test parts
+    * ([[withSeededSplitPoints]]), [[sgdSweep]] on the train split (8
+    * partitions, cached) and scored on the test split. Shared by
+    * `VirusPipeline.sgdReport` and ml10. */
   def sgdSplitSweep(data: DataFrame, seed: Long,
       regParams: Seq[Double] = SgdRegParams): Seq[SgdPoint] =
-    withSeededSplit(data, seed) { case Array(train0, _, test0) =>
-      def toRdd(df: DataFrame) = df.rdd.map { r =>
-        LabeledPoint(r.getDouble(0), OldVectors.fromML(
-          r.getAs[org.apache.spark.ml.linalg.Vector](1)))
-      }
-      val train = toRdd(train0).coalesce(8).cache()
-      try sgdSweep(train, toRdd(test0), regParams)
+    withSeededSplitPoints(data, seed) { case Array(train0, _, test) =>
+      val train = train0.coalesce(8).cache()
+      try sgdSweep(train, test, regParams)
       finally train.unpersist(false)
     }
+
+  /** [[seededSplit]]'s three splits as RDDs of points, lent to `use`:
+    * the same points in the same partitions and order. The frame's
+    * (label, features) rows are read once, sorted within their
+    * partitions by randomSplit's order ([[splitOrder]]) and cached;
+    * each split draws randomSplit's own per-partition
+    * `BernoulliCellSampler` (seed + partition index) over them. On the
+    * RDD side the split compiles no sort and no sampler stage (their
+    * bounds are literals in generated code, so each split is a class
+    * of its own) and holds no sort page per task, and no cached frame
+    * is materialized in a job of its own. The parent is unpersisted
+    * when `use` returns or throws. */
+  def withSeededSplitPoints[A](data: DataFrame, seed: Long)(
+      use: Array[RDD[LabeledPoint]] => A): A = {
+    val parent = data.select("label", "features").rdd
+      .mapPartitions(rows => rows.map(r => LabeledPoint(r.getDouble(0),
+        OldVectors.fromML(r.getAs[org.apache.spark.ml.linalg.Vector](1))))
+        .toArray.sorted(splitOrder).iterator, preservesPartitioning = true)
+      .cache()
+    val bounds = SplitWeights.map(_ / SplitWeights.sum).scanLeft(0.0)(_ + _)
+    try use(bounds.indices.init.toArray.map { i =>
+      parent.mapPartitionsWithIndex({ (part, points) =>
+        val sampler = new BernoulliCellSampler[LabeledPoint](bounds(i),
+          bounds(i + 1))
+        sampler.setSeed(seed + part)
+        sampler.sample(points)
+      }, preservesPartitioning = true)
+    })
+    finally parent.unpersist(false)
+  }
+
+  /** The order `randomSplit` sorts (label, features) rows by: the label,
+    * then the vector as its UDT's struct (type, size, indices, values)
+    * — sparse (type 0) before dense, whose size and indices are null;
+    * arrays element by element, then the shorter first; doubles as
+    * `SQLOrderingUtil.compareDoubles`. Stage3SweepSpec holds the
+    * splits to `randomSplit`'s on sparse and dense frames. */
+  private val splitOrder: Ordering[LabeledPoint] = {
+    def arrays(n: Int, m: Int)(at: Int => Int): Int = {
+      var i = 0
+      var c = 0
+      while (c == 0 && i < math.min(n, m)) { c = at(i); i += 1 }
+      if (c != 0) c else Integer.compare(n, m)
+    }
+    def doubles(a: Array[Double], b: Array[Double]): Int =
+      arrays(a.length, b.length)(i => SQLOrderingUtil.compareDoubles(a(i), b(i)))
+    def vectors(a: OldVector, b: OldVector): Int = (a, b) match {
+      case (x: OldSparseVector, y: OldSparseVector) =>
+        val size = Integer.compare(x.size, y.size)
+        if (size != 0) size
+        else {
+          val indices = arrays(x.indices.length, y.indices.length)(i =>
+            Integer.compare(x.indices(i), y.indices(i)))
+          if (indices != 0) indices else doubles(x.values, y.values)
+        }
+      case (x: OldDenseVector, y: OldDenseVector) => doubles(x.values, y.values)
+      case (_: OldSparseVector, _) => -1
+      case _ => 1
+    }
+    (a, b) => {
+      val label = SQLOrderingUtil.compareDoubles(a.label, b.label)
+      if (label != 0) label else vectors(a.features, b.features)
+    }
+  }
+
+  /** The (train, cv, test) weights of [[seededSplit]]. */
+  private val SplitWeights = Array(0.5, 0.25, 0.25)
 
   /** U3: the reference's seeded 50/25/25 (train, cv, test) split of a
     * frame's (label, features) columns (`SVMDT.scala:92-95`).
@@ -246,7 +313,7 @@ object MlPipeline {
     * samples, so each split re-reads and re-sorts the whole frame;
     * stage 3 goes through [[withSeededSplit]] instead. */
   def seededSplit(data: DataFrame, seed: Long): Array[DataFrame] =
-    data.select("label", "features").randomSplit(Array(0.5, 0.25, 0.25), seed)
+    data.select("label", "features").randomSplit(SplitWeights, seed)
 
   /** [[seededSplit]] lent to `use`: the (label, features) frame is
     * sorted within its partitions by exactly the keys `randomSplit`

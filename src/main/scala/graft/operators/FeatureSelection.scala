@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.functions.Funcs._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** The reference's stage-1 pipeline (feature selection + vectorization,
   * `FeatureSelectionCloud.scala`) re-expressed as a parameterized,
@@ -16,9 +18,11 @@ import org.apache.spark.sql.functions._
   * the reference's O(#files) scheduler round-trips: every step below
   * is one distributed job over the whole corpus.
   *
-  * Each step has one entry point. The counting steps take the output
-  * of [[distinctCalls]], which a caller runs once and may materialize
-  * to share between ranking and vectorization (the `OfDistinct` names
+  * Each step has one entry point; the top-K comes as a frame
+  * ([[topFeatures]]) or collected ([[collectTopFeatures]]), in one
+  * ranking order. The counting steps take the output of
+  * [[distinctCalls]], which a caller runs once and may materialize to
+  * share between ranking and vectorization (the `OfDistinct` names
   * state that input contract).
   *
   * Scale notes (100 TB):
@@ -31,8 +35,12 @@ import org.apache.spark.sql.functions._
   *     one shuffle); totals are a 1-row broadcast.
   *   - [[vectorizeOfDistinct]] replaces the reference's per-sample
   *     leftOuterJoin-per-file loop (`doesFeatureExist`, `:494-519`)
-  *     with ONE broadcast semi-join of the corpus against the top-K
-  *     feature table.
+  *     with ONE map-side pass: each distinct call looks its token up in
+  *     the top-K's token → rank map, which the caller collected (at
+  *     most K entries, shipped inside the task closure). A broadcast
+  *     join would add the relation's estimated size (one 16 MB page at
+  *     any K) to every task's peak memory and plan an exchange, a
+  *     build side and a probe for a table the driver already holds.
   */
 object FeatureSelection {
 
@@ -80,12 +88,15 @@ object FeatureSelection {
                              col("np")), lit(0.0)), 6))
       .select("token", "np", "nn", "info_gain")
 
+  /** The ranking order: gain descending, ties by token (the
+    * reference's tie order was partition-dependent, SURVEY §2.6). */
+  private val byGain = Seq(col("info_gain").desc, col("token").asc)
+
   /** O1+O3: top-K by gain with a 1-based rank (`feature_index`).
     * `takeOrdered` + per-sample `zipWithIndex` in the reference
     * (`FeatureSelectionCloud.scala:438,505`) become orderBy.limit
     * (TakeOrderedAndProject) + ONE `row_number` window over the tiny
-    * ranked table. Tie-break on token keeps the rank deterministic
-    * (the reference's tie order was partition-dependent, SURVEY §2.6). */
+    * ranked table. Tie-break on token keeps the rank deterministic. */
   def topFeatures(ranked: DataFrame, k: Int): DataFrame = {
     // The partitionless Window triggers WindowExec's "moving all data
     // to a single partition" warning — here that is the DESIGN, not a
@@ -94,24 +105,43 @@ object FeatureSelection {
     // regardless of corpus size. The heavy lifting (global top-K over
     // the full ranked table) is TakeOrderedAndProject, which is
     // distributed partial-top-K + driver merge.
-    val w = Window.orderBy(col("info_gain").desc, col("token").asc)
-    ranked.orderBy(col("info_gain").desc, col("token").asc).limit(k)
-      .withColumn("feature_index", row_number().over(w))
+    ranked.orderBy(byGain: _*).limit(k)
+      .withColumn("feature_index", row_number().over(Window.orderBy(byGain: _*)))
       .select("feature_index", "token", "info_gain")
   }
 
+  /** [[topFeatures]]' rows, collected: the same TakeOrderedAndProject,
+    * whose collect is already in rank order, numbered on the driver
+    * instead of by a window — `(feature_index, token, info_gain)`. */
+  def collectTopFeatures(ranked: DataFrame,
+                         k: Int): Seq[(Int, String, Double)] =
+    ranked.orderBy(byGain: _*).limit(k).select("token", "info_gain")
+      .collect().toSeq.zipWithIndex
+      .map { case (r, i) => (i + 1, r.getString(0), r.getDouble(1)) }
+
   /** J2+O5: sparse binary vectorization — which top-K features each
-    * sample of a [[distinctCalls]] table contains. One broadcast join
-    * for the whole corpus (replaces the reference's per-sample job
-    * storm, `doesFeatureExist` `FeatureSelectionCloud.scala:494-519`).
+    * sample of a [[distinctCalls]] table contains, given the collected
+    * top-K ([[collectTopFeatures]]). One map-side pass for the whole
+    * corpus (replaces the reference's per-sample job storm,
+    * `doesFeatureExist` `FeatureSelectionCloud.scala:494-519`): each
+    * call looks its token up in the top-K's token → rank map, and a
+    * call whose token has no rank (or is null) emits no row.
     * Output long-form: `(sample_id, label, feature_index)`. */
-  def vectorizeOfDistinct(distinct: DataFrame, top: DataFrame,
-                          posCls: String): DataFrame =
+  def vectorizeOfDistinct(distinct: DataFrame,
+                          top: Seq[(Int, String, Double)],
+                          posCls: String): DataFrame = {
+    val ranks = top.map { case (rank, token, _) => token -> rank }.toMap
+    // the Java form: its String argument is converted as is, where a
+    // typed Scala UDF compiles a generated decoder for it
+    val rankOf = udf(new UDF1[String, Int] {
+      def call(token: String): Int = ranks.getOrElse(token, 0)
+    }, IntegerType)
     distinct
-      .join(broadcast(top.select("token", "feature_index")), Seq("token"))
       .select(col("sample_id"),
               when(col("cls") === posCls, 1.0).otherwise(0.0).as("label"),
-              col("feature_index"))
+              rankOf(col("token")).as("feature_index"))
+      .filter(col("feature_index") > 0)
+  }
 
   /** K2: LIBSVM text rows `label idx:1 idx:1 …`, 1-based ascending
     * indices, presence-only values — byte format of

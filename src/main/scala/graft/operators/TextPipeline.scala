@@ -134,15 +134,16 @@ object TextPipeline {
 
     // vp04: J2+O5 sparse vectorization, long form. The tokenized
     // distinct-calls table feeds BOTH the info-gain ranking and the
-    // vectorize join — materialize it once (locally localCheckpoint;
+    // vectorization — materialize it once (locally localCheckpoint;
     // on a cluster a parquet checkpoint, same trade as dd05/dd10,
     // `dedup/Dedup.scala:253-261`) so the corpus is scanned/exploded
-    // once per query instead of once per consumer.
+    // once per query instead of once per consumer. The top-K is
+    // collected first; the vectorization looks ranks up in it.
     "vp04_vectorize" -> ((s, d) => {
       val distinct = FeatureSelection.distinctCalls(docCalls(s, d)).localCheckpoint()
       val ranked = FeatureSelection.infoGainRankedOfDistinct(distinct, "pos", docTotals(s, d))
       FeatureSelection.vectorizeOfDistinct(distinct,
-          FeatureSelection.topFeatures(ranked, TopK), "pos")
+          FeatureSelection.collectTopFeatures(ranked, TopK), "pos")
         .withColumnRenamed("sample_id", "doc_id")
         .orderBy("doc_id", "feature_index")
     }),
@@ -155,7 +156,7 @@ object TextPipeline {
       val ranked = FeatureSelection.infoGainRankedOfDistinct(distinct, "pos", docTotals(s, d))
       FeatureSelection.libsvmRows(
           FeatureSelection.vectorizeOfDistinct(distinct,
-            FeatureSelection.topFeatures(ranked, TopK), "pos"))
+            FeatureSelection.collectTopFeatures(ranked, TopK), "pos"))
         .withColumnRenamed("sample_id", "doc_id")
         .orderBy("doc_id")
     }),

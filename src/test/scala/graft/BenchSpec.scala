@@ -12,7 +12,7 @@ class BenchSpec extends AnyFunSuite {
     * peak of n MB, so a row names the window it was given. */
   private def numbered(): () => Timing.Window = {
     var n = 0
-    () => { n += 1; Timing.Window(n, 10L * n, 1048576L * n) }
+    () => { n += 1; Timing.Window(n, 10L * n, 1048576L * n, n.toLong) }
   }
 
   test("a body that throws yields -1 plus the stage rows it reached") {
@@ -35,7 +35,7 @@ class BenchSpec extends AnyFunSuite {
   test("a skipped entry adds no rows and opens no window") {
     var windows = 0
     val r = Bench.staged("pipeline_x", skip = true,
-      () => { windows += 1; Timing.Window(0, 0L, 0L) }) { _ =>
+      () => { windows += 1; Timing.Window(0, 0L, 0L, 0L) }) { _ =>
       fail("a skipped entry ran its body")
     }
     assert(r == Bench.Rows(Nil, Nil, Nil))

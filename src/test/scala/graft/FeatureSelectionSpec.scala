@@ -58,7 +58,7 @@ class FeatureSelectionSpec extends AnyFunSuite {
 
   test("vectorize + libsvm: zero-feature samples emit no row") {
     val ranked = FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals)
-    val top = FeatureSelection.topFeatures(ranked, 10)
+    val top = FeatureSelection.collectTopFeatures(ranked, 10)
     val vec = FeatureSelection.vectorizeOfDistinct(distinct, top, "virus")
     val byDoc = vec.collect()
       .groupBy(_.getString(0))

@@ -47,9 +47,19 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"))
   }
 
-  test("vp04 vectorize broadcasts the feature table into one corpus join") {
-    val p = plan("vp04_vectorize")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"))
+  test("stage 1 vectorizes by a rank lookup, no broadcast: the " +
+    "pipeline, vp04 and vp05") {
+    val a = graft.apps.VirusPipeline.run(spark,
+      TestFiles.tinyApiLogs.toString, topN = 10, k = 2)
+    try {
+      val plans = Seq("pipeline vectors" -> a.vectors,
+          "pipeline samples" -> a.samples)
+        .map { case (n, df) => n -> df.queryExecution.executedPlan.toString } ++
+        Seq("vp04_vectorize", "vp05_libsvm").map(q => q -> plan(q))
+      for ((n, p) <- plans)
+        assert(!p.contains("BroadcastHashJoin") &&
+          !p.contains("BroadcastExchange"), s"$n broadcasts:\n$p")
+    } finally a.samples.unpersist(true)
   }
 
   test("vp04/vp05 tokenize the corpus once — shared table materialized") {

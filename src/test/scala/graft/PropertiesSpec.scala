@@ -79,10 +79,14 @@ class PropertiesSpec extends AnyFunSuite {
         byToken(FeatureSelection.infoGainRankedOfDistinct(d, "virus", totals)) ==
           byToken(infoGainByJoin(d, "virus", totals)))
 
-      val top = FeatureSelection.topFeatures(
-        FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals), 5)
+      val rankedDf =
+        FeatureSelection.infoGainRankedOfDistinct(distinct, "virus", totals)
+      val top = FeatureSelection.collectTopFeatures(rankedDf, 5)
+      // the collected top-K is topFeatures' frame, rank for rank
+      val topOk = top == FeatureSelection.topFeatures(rankedDf, 5).collect()
+        .toSeq.map(r => (r.getInt(0), r.getString(1), r.getDouble(2)))
       val vec = FeatureSelection.vectorizeOfDistinct(distinct, top, "virus").collect()
-      val k = top.count()
+      val k = top.size
       val vecOk = vec.forall { r =>
         val fi = r.getInt(2); fi >= 1 && fi <= k &&
           (r.getDouble(1) == 0.0 || r.getDouble(1) == 1.0)
@@ -93,7 +97,7 @@ class PropertiesSpec extends AnyFunSuite {
       val rowsOk = rows.length <= cs.size &&
         rows.forall(_.getString(1).matches("[01]( \\d+:1)+"))
 
-      dfOk && gainOk && joinOk && vecOk && rowsOk
+      dfOk && gainOk && joinOk && topOk && vecOk && rowsOk
     })
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, Lo
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{SQLDataTypes, Vectors}
+import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
+import org.apache.spark.mllib.regression.LabeledPoint
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -172,6 +174,25 @@ class Stage3SweepSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
             s"a split does not read the cached parent:\n$plan")
         }
       }
+    }
+
+  for ((name, frame) <- Seq[(String, () => DataFrame)](
+      "virus-shaped" -> (() => samples), "ml10-shaped" -> (() => embeddingsLike)))
+    test(s"withSeededSplitPoints on the $name frame: randomSplit's rows " +
+      "as points, in the same partitions and order, and no leak") {
+      val data = frame()
+      def point(r: Row) = LabeledPoint(r.getDouble(0),
+        OldVectors.fromML(r.getAs[org.apache.spark.ml.linalg.Vector](1)))
+      val expected = MlPipeline.seededSplit(data, Seed).toSeq
+        .map(byPartition(_).map { case (i, r) => (i, point(r)) })
+      assert(expected.forall(_.nonEmpty))
+      val sc = spark.sparkContext
+      val persisted = sc.getPersistentRDDs.keySet
+      val got = MlPipeline.withSeededSplitPoints(data, Seed)(_.toSeq.map(
+        _.mapPartitionsWithIndex((i, ps) => ps.map(p => (i, p))).collect().toSeq))
+      assert(got == expected)
+      assert(sc.getPersistentRDDs.keySet == persisted,
+        s"persistent RDDs left: ${sc.getPersistentRDDs.keySet -- persisted}")
     }
 
   test("withSeededSplit releases its parent when the body throws") {

@@ -46,6 +46,19 @@ class StageClockSpec extends AnyFunSuite {
     assertTimes(Seq(stages(0), stages(2)), wall)
   }
 
+  test("a window counts the classes compiled for a plan never seen " +
+    "before, and none when the same plan runs again") {
+    // a literal nothing else uses is inlined into the generated code, so
+    // the stage's class is new to this JVM's codegen cache
+    val q = spark.range(0, 100, 1, 2)
+      .selectExpr(s"id * ${System.nanoTime()}L + 7 AS v")
+    val (first, w1) = JobCount.windowOf(spark)(q.collect().toSeq)
+    val (again, w2) = JobCount.windowOf(spark)(q.collect().toSeq)
+    assert(first == again)
+    assert(w1.compiles >= 1, s"the first run compiled ${w1.compiles}")
+    assert(w2.compiles == 0, s"the second run compiled ${w2.compiles}")
+  }
+
   test("VirusPipeline.run reports s1_features then s2_cluster") {
     val (stages, wall) = stagesOf { onStage =>
       VirusPipeline.run(spark, TestFiles.tinyApiLogs.toString, topN = 10,

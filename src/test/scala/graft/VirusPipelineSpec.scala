@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.apps.VirusPipeline
 import graft.io.Codecs
 import graft.operators.FeatureSelection
@@ -59,12 +61,13 @@ class VirusPipelineSpec extends AnyFunSuite {
       VirusPipeline.writeArtifacts(a, out))
     val (_, entropyJobs) = JobCount.of(spark)(
       VirusPipeline.entropyScore(a.assignments))
-    // the writers collect top and the cached samples' LIBSVM lines;
-    // output.txt, data.json and the entropy read local frames
-    assert(writeJobs <= 2, s"writeArtifacts ran $writeJobs jobs")
+    // the writers collect the cached samples' LIBSVM lines;
+    // topFeatures.txt, output.txt, data.json and the entropy read local
+    // frames
+    assert(writeJobs <= 1, s"writeArtifacts ran $writeJobs jobs")
     assert(entropyJobs == 0, s"entropyScore ran $entropyJobs jobs")
     val total = runJobs + writeJobs + entropyJobs
-    assert(total <= 23, s"run $runJobs + write $writeJobs + " +
+    assert(total <= 17, s"run $runJobs + write $writeJobs + " +
       s"entropy $entropyJobs = $total jobs")
   }
 
@@ -86,6 +89,42 @@ class VirusPipelineSpec extends AnyFunSuite {
     assert(cache.isEmpty, "a frame cached by run is still in the cache")
     assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
       s"run left persistent RDDs ${sc.getPersistentRDDs.keySet -- persisted}")
+  }
+
+  test("the benchmark's pass sequence compiles at most 60 classes, " +
+    "then none when it runs again") {
+    // a seeded two-class corpus: 60 files a class over 40 APIs, each
+    // API's presence leaning towards one class by its index
+    val corpus = TestFiles.tempDir("graft_vpcodegen_")
+    val rnd = new scala.util.Random(11)
+    for (cls <- Seq("clean", "virus"); i <- 0 until 60) {
+      val d = Files.createDirectories(corpus.resolve(s"${cls}_LOGS_CONVERTED"))
+      val lean = if (cls == "virus") 0.2 else -0.2
+      val apis = (0 until 40).filter(j =>
+        rnd.nextDouble() < 0.4 + lean * (j % 3 - 1))
+      Files.write(d.resolve(s"s$i.txt"),
+        apis.map(j => s"Api$j -\n").mkString.getBytes)
+    }
+    // the pass of the benchmark's virus workload, on a fresh copy of the
+    // corpus as each of its passes reads, with the output check's collect
+    def pass(): Long = {
+      val dir = TestFiles.copyOf(corpus).toString
+      val out = TestFiles.tempDir("graft_vpcodegen_out_").toString
+      val (_, w) = JobCount.windowOf(spark) {
+        val a = VirusPipeline.run(spark, dir, runs = 3)
+        VirusPipeline.writeArtifacts(a, out)
+        val samples = VirusPipeline.assemble(a.vectors, a.top.count().toInt)
+        val sgd = VirusPipeline.sgdReport(spark, samples).collect()
+        VirusPipeline.entropyScore(a.assignments)
+        a.clusterReport.collect()
+        a.samples.unpersist(true)
+        assert(sgd.length == 5)
+      }
+      w.compiles
+    }
+    val compiles = Seq(pass(), pass(), pass())
+    assert(compiles.head <= 60 && compiles.tail == Seq(0L, 0L),
+      s"classes compiled by passes 1-3: $compiles")
   }
 
   test("LIBSVM codec round-trips") {
