@@ -59,14 +59,14 @@ import org.apache.spark.sql.functions._
   */
 object CurationIncremental {
 
-  // gate thresholds — CurationPipeline.run's defaults, shared verbatim
-  // (private[graft]: st19's streaming ingest gate reuses them)
+  // gate thresholds, shared by CurationPipeline.run's gate and st19's
+  // streaming ingest gate
   private[graft] val MinQuality = 0.3
   private[graft] val Langs = Seq("en", "de", "es")
   private[graft] val MaxDupBigramFrac = 0.2
   private[graft] val BenchN = TextAnalysis.DeconBenchN
 
-  private def gateCond: Column =
+  private[graft] def gateCond: Column =
     col("quality_score") >= MinQuality &&
       col("predicted_lang").isin(Langs: _*) &&
       col("dup_bigram_frac") <= MaxDupBigramFrac
@@ -647,25 +647,11 @@ object CurationIncremental {
         fs.setTimes(new Path(s"$root/landing/w$k.parquet"),
           60000L * (k + 1), -1)
       }
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$root/landing")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            refreshWaveBatch(ss, root, docs, df, id); ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
+      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+      graft.streaming.EventStream.drainBatches(ss, s"$root/landing",
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))), s"$root/ckpt") {
+        (df, id) => refreshWaveBatch(ss, root, docs, df, id)
       }
       val ver = Commit.readMarker(ss, s"$root/_SNAPSHOT")
         .stripPrefix("snap").toLong

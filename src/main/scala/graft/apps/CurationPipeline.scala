@@ -49,10 +49,6 @@ object CurationPipeline {
     *   embeds only a subset — and the coverage gap is REPORTED in the
     *   stats table instead of silently shrinking the compressed set. */
   def run(spark: SparkSession, dir: String,
-          minQuality: Double = 0.3,
-          langs: Seq[String] = Seq("en", "de", "es"),
-          maxDupBigramFrac: Double = 0.2,
-          benchN: Int = TextAnalysis.DeconBenchN,
           checkpoint: Option[Dedup.CheckpointStrategy] = None,
           requireEmbeddingCoverage: Boolean = false,
           alignGateU6: Option[Long] = None,
@@ -114,15 +110,14 @@ object CurationPipeline {
 
     // 3. quality + language + repetition gate — two per-row scoring
     // projections over the shared tokenization, id-joined to the
-    // survivors. localCheckpoint: the gate's survivors feed the s4
-    // count, the decontamination candidate restriction, AND the final
-    // projection — one materialization (ids + scores only).
+    // survivors, filtered by CurationIncremental's thresholds.
+    // localCheckpoint: the gate's survivors feed the s4 count, the
+    // decontamination candidate restriction, AND the final projection —
+    // one materialization (ids + scores only).
     val gated = nearKeep.join(scoredAll, Seq("doc_id"))
       .join(TextAnalysis.repetitionScoredT(toksAll)
         .select("doc_id", "dup_bigram_frac"), Seq("doc_id"))
-      .filter(col("quality_score") >= minQuality &&
-        col("predicted_lang").isin(langs: _*) &&
-        col("dup_bigram_frac") <= maxDupBigramFrac)
+      .filter(CurationIncremental.gateCond)
       .localCheckpoint()
     val nGated = gated.count()
     clock.done("s4_gates")
@@ -136,7 +131,8 @@ object CurationPipeline {
     // gram explode — answer-identical, since the contaminated ids are
     // anti-joined against the survivors anyway), so the 8-gram blowup
     // tracks the survivor count, not the corpus (round-9 verdict #1).
-    val bench = TextAnalysis.benchSample(docs, benchN).localCheckpoint()
+    val bench = TextAnalysis.benchSample(docs, CurationIncremental.BenchN)
+      .localCheckpoint()
     val candToks = toksAll
       .join(gated.select("doc_id"), Seq("doc_id"), "left_semi")
     val deconBase = gated

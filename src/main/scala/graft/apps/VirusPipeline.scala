@@ -217,6 +217,9 @@ object VirusPipeline {
                            seed: Long = 42L): DataFrame = {
     val (dt, svc) = MlPipeline.withSeededSplit(samples, seed) {
       case Array(train, cv, test) =>
+        // one scan fills the cached parent before the concurrent fits,
+        // which would otherwise each submit AQE's table-cache job for it
+        train.count()
         (MlPipeline.dtSweep(train, cv, seed).map { case (imp, depth, auc) =>
           (s"dt-$imp", depth.toDouble, auc,
             f"$imp depth $depth, AUC = ${auc * 100}%2.2f%%")

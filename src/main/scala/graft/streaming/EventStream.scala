@@ -1,17 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-/** Structured Streaming over the `events` table: hour-windowed counts
-  * and value sums per event type.
+/** Structured Streaming over the testdata tables: the st* queries.
   *
   * The reference has no streaming at all (SURVEY §2.7) — this is the
-  * engine extension for continuous ingestion. The aggregation is the
+  * engine extension for continuous ingestion. st01's aggregation is the
   * exact batch q11 twin, so the batch oracle validates the streaming
   * result: hour-aligned `window(ts, '1 hour')` starts equal
   * `date_trunc('hour', ts)`.
+  *
+  * Main code runs a stream one way only: through [[drain]], by its
+  * memory-sink entry point [[memoryDrain]] or its `foreachBatch` entry
+  * point [[drainBatches]].
   *
   * Scale: stateful windowed aggregation with a watermark bounds state;
   * partial aggregation happens per-microbatch before the state-store
@@ -37,13 +41,13 @@ object EventStream {
     * real Structured Streaming execution, batch-shaped answer. */
   def hourlyTotals(spark: SparkSession, dir: String,
                    sinkName: String = "st_events_hourly"): DataFrame =
-    runStream(spark, dir, sinkName, copies = 1, outputMode = "complete") {
-      df =>
-        df.withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,2)")).cast("double")
-              .as("sum_value"))
+    memoryDrain(spark, dir, "events", sinkName, "complete",
+      statePartitions = 8, copies = 1) { df =>
+      df.withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).cast("double")
+            .as("sum_value"))
     }
       .select(col("window.start").as("hour"), col("event_type"),
         col("n"), col("sum_value"))
@@ -66,42 +70,75 @@ object EventStream {
     ss
   }
 
-  /** Stages `copies` symlinks to events.parquet in a temp dir
-    * (FileStreamSource requires a directory; a real deployment streams
-    * from an arriving-files directory anyway), runs `build` on a
-    * parquet stream of it, drains to a memory sink, and returns the
-    * sink table. */
-  private def runStream(spark: SparkSession, dir: String, sinkName: String,
-      copies: Int, outputMode: String)
-      (build: DataFrame => DataFrame): DataFrame = {
-    val ss = streamSession(spark, 8)
-    val fileSchema = probeSchema(ss, s"$dir/events.parquet")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-    // everything after dir creation is inside the try: a failure in
-    // link staging, plan building, or start() must still clean up the
-    // temp dir (and stop the query if it got that far)
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+  /** Starts the query `start` builds, processes everything available
+    * to it, and stops it. stop() of a failed query can itself throw;
+    * that is swallowed, so the original failure surfaces and the
+    * caller's cleanup still runs. */
+  private def drain(start: => StreamingQuery): Unit = {
+    var q: StreamingQuery = null
     try {
-      (1 to copies).foreach { i =>
-        java.nio.file.Files.createSymbolicLink(
-          srcDir.resolve(s"events_$i.parquet"),
-          java.nio.file.Paths.get(s"$dir/events.parquet"))
-      }
-      val stream = build(graft.Tables.normalizeEventTs(
-        ss.readStream.schema(fileSchema).parquet(srcDir.toString)))
-      q = stream.writeStream.outputMode(outputMode)
-        .format("memory").queryName(sinkName).start()
+      q = start
       q.processAllAvailable()
     } finally {
-      // stop() of an already-failed query can itself throw — it must
-      // not skip the file cleanup or mask the original failure
       if (q != null) try q.stop() catch { case _: Exception => }
-      (1 to copies).foreach { i =>
-        java.nio.file.Files.deleteIfExists(srcDir.resolve(s"events_$i.parquet"))
-      }
+    }
+  }
+
+  /** The memory-sink entry point of [[drain]]: stages `copies`
+    * symlinks to `<dir>/<table>.parquet` in a temp dir
+    * (FileStreamSource requires a directory; a real deployment streams
+    * from an arriving-files directory anyway), runs `build` on a
+    * parquet stream of it in a [[streamSession]] with
+    * `statePartitions` state stores, drains to the memory sink
+    * `sinkName`, and returns the sink table. The temp dir is removed
+    * even when staging, `build` or start() throws. `events` streams
+    * with its probed footer schema ([[probeSchema]]) through
+    * `Tables.normalizeEventTs`; every other table with its
+    * [[streamSchemas]] entry. */
+  private[graft] def memoryDrain(spark: SparkSession, dir: String,
+      table: String, sinkName: String, outputMode: String,
+      statePartitions: Int, copies: Int)
+      (build: DataFrame => DataFrame): DataFrame = {
+    val ss = streamSession(spark, statePartitions)
+    val events = table == "events"
+    val schema =
+      if (events) probeSchema(ss, s"$dir/events.parquet")
+      else streamSchemas(table)
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_")
+    val links = (1 to copies).map(i => srcDir.resolve(s"${table}_$i.parquet"))
+    try {
+      links.foreach(java.nio.file.Files.createSymbolicLink(_,
+        java.nio.file.Paths.get(s"$dir/$table.parquet")))
+      val source = ss.readStream.schema(schema).parquet(srcDir.toString)
+      val stream = build(
+        if (events) graft.Tables.normalizeEventTs(source) else source)
+      drain(stream.writeStream.outputMode(outputMode)
+        .format("memory").queryName(sinkName).start())
+    } finally {
+      links.foreach(java.nio.file.Files.deleteIfExists)
       java.nio.file.Files.deleteIfExists(srcDir)
     }
     ss.table(sinkName)
+  }
+
+  /** The `foreachBatch` entry point of [[drain]]: streams the parquet
+    * files under `src` with `schema`, one file per microbatch,
+    * checkpointed under `ckpt`, hands every microbatch and its id to
+    * `each`, and returns how many microbatches it delivered. */
+  private[graft] def drainBatches(ss: SparkSession, src: String,
+      schema: StructType, ckpt: String)
+      (each: (DataFrame, Long) => Unit): Int = {
+    var batches = 0
+    drain(ss.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch((df: DataFrame, id: Long) => {
+        each(df, id)
+        batches += 1
+      })
+      .start())
+    batches
   }
 
   /** st12's exactly-once commit core: an idempotent, batchId-keyed
@@ -139,6 +176,29 @@ object EventStream {
     s.read.schema(schema).parquet(ids.map(id => s"$out/batch=$id"): _*)
   }
 
+  /** The guarded publish the per-batch versioned merges share: skips
+    * the batch WITHOUT touching storage when the `_SNAPSHOT` marker
+    * already names `snap<id>`; otherwise keeps the max version per
+    * `doc_id` over the frame `merge` aligns from the published snapshot
+    * (None before the first publish), writes it to `snap<id>`, swaps
+    * the marker, and returns true. */
+  private def publishVersioned(ss: SparkSession, out: String, id: Long)
+      (merge: Option[DataFrame] => DataFrame): Boolean = {
+    val marker = s"$out/_SNAPSHOT"
+    val cur =
+      if (graft.io.Commit.exists(ss, marker))
+        Some(graft.io.Commit.readMarker(ss, marker))
+      else None
+    if (cur.contains(s"snap$id")) return false
+    val all = merge(cur.map(p => ss.read.parquet(s"$out/$p")))
+    all.groupBy("doc_id")
+      .agg(max_by(struct(all.columns.map(col): _*), col("version")).as("r"))
+      .select("r.*")
+      .write.mode("overwrite").parquet(s"$out/snap$id")
+    graft.io.Commit.writeMarker(ss, marker, s"snap$id")
+    true
+  }
+
   /** st18's per-batch versioned merge: read the published snapshot
     * (via the io09 marker), keep-max-version-per-key over
     * snapshot ∪ batch, write the merged table to `snap<batchId>`, and
@@ -149,7 +209,15 @@ object EventStream {
     * re-running the merge would read `cur` from `snap$id` and
     * mode("overwrite") the very directory it reads. The guard makes
     * the publish idempotent at the I/O level, not just the merge
-    * algebra (Round10OpsSpec replays a batch through this path). */
+    * algebra (EventStreamSpec replays a batch through this path). The
+    * first batch merges into an empty snapshot of its own schema. */
+  private[graft] def upsertDocBatch(ss: SparkSession, out: String,
+      df: DataFrame, id: Long): Boolean =
+    publishVersioned(ss, out, id) { cur =>
+      cur.getOrElse(ss.createDataFrame(new java.util.ArrayList[Row](),
+        df.schema)).unionByName(df)
+    }
+
   /** st24's per-batch EVOLVE-merge: st18's version-keyed upsert when
     * the CDC stream carries a column the published table never had —
     * io19b's NULL-backfill law applied per microbatch. The schema
@@ -161,22 +229,12 @@ object EventStream {
     * published base — an evolving CDC stream with no table to evolve
     * is a staging bug, not a case to paper over. */
   private[graft] def upsertEvolveBatch(ss: SparkSession, out: String,
-      df: DataFrame, id: Long): Boolean = {
-    val marker = s"$out/_SNAPSHOT"
-    require(graft.io.Commit.exists(ss, marker),
-      s"st24 evolve-merge needs a published base snapshot at $out")
-    if (graft.io.Commit.readMarker(ss, marker) == s"snap$id") return false
-    val cur = ss.read.parquet(
-      s"$out/" + graft.io.Commit.readMarker(ss, marker))
-    val all = cur.unionByName(df, allowMissingColumns = true)
-    val cols = all.columns.map(col)
-    all.groupBy("doc_id")
-      .agg(max_by(struct(cols: _*), col("version")).as("r"))
-      .select("r.*")
-      .write.mode("overwrite").parquet(s"$out/snap$id")
-    graft.io.Commit.writeMarker(ss, marker, s"snap$id")
-    true
-  }
+      df: DataFrame, id: Long): Boolean =
+    publishVersioned(ss, out, id) { cur =>
+      require(cur.isDefined,
+        s"st24 evolve-merge needs a published base snapshot at $out")
+      cur.get.unionByName(df, allowMissingColumns = true)
+    }
 
   /** st25's per-batch WIDEN+RENAME merge: st24's version-keyed upsert
     * when the CDC stream carries io19c's other two evolve cases —
@@ -188,50 +246,19 @@ object EventStream {
     * no-op, so every later batch flows through the identical code
     * path. Same replay guard as st18/st24. */
   private[graft] def upsertWidenRenameBatch(ss: SparkSession, out: String,
-      df: DataFrame, id: Long): Boolean = {
-    val marker = s"$out/_SNAPSHOT"
-    require(graft.io.Commit.exists(ss, marker),
-      s"st25 widen+rename merge needs a published base snapshot at $out")
-    if (graft.io.Commit.readMarker(ss, marker) == s"snap$id") return false
-    val cur0 = ss.read.parquet(
-      s"$out/" + graft.io.Commit.readMarker(ss, marker))
-    val cur =
-      if (cur0.columns.contains("lang"))
-        cur0.select(col("doc_id"), col("text"),
-          col("lang").as("language"), col("source"),
-          col("n_chars").cast("long").as("n_chars"), col("version"))
-      else cur0
-    val all = cur.unionByName(df)
-    val cols = all.columns.map(col)
-    all.groupBy("doc_id")
-      .agg(max_by(struct(cols: _*), col("version")).as("r"))
-      .select("r.*")
-      .write.mode("overwrite").parquet(s"$out/snap$id")
-    graft.io.Commit.writeMarker(ss, marker, s"snap$id")
-    true
-  }
-
-  private[graft] def upsertDocBatch(ss: SparkSession, out: String,
-      df: DataFrame, id: Long): Boolean = {
-    val marker = s"$out/_SNAPSHOT"
-    val published = graft.io.Commit.exists(ss, marker)
-    if (published && graft.io.Commit.readMarker(ss, marker) == s"snap$id")
-      return false
-    val cur =
-      if (published)
-        ss.read.parquet(s"$out/" + graft.io.Commit.readMarker(ss, marker))
-      else ss.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
-    cur.unionByName(df)
-      .groupBy("doc_id")
-      .agg(max_by(
-        struct(col("doc_id"), col("text"), col("lang"),
-          col("source"), col("version")), col("version")).as("r"))
-      .select("r.*")
-      .write.mode("overwrite").parquet(s"$out/snap$id")
-    graft.io.Commit.writeMarker(ss, marker, s"snap$id")
-    true
-  }
+      df: DataFrame, id: Long): Boolean =
+    publishVersioned(ss, out, id) { cur =>
+      require(cur.isDefined,
+        s"st25 widen+rename merge needs a published base snapshot at $out")
+      val base = cur.get
+      val aligned =
+        if (base.columns.contains("lang"))
+          base.select(col("doc_id"), col("text"),
+            col("lang").as("language"), col("source"),
+            col("n_chars").cast("long").as("n_chars"), col("version"))
+        else base
+      aligned.unionByName(df)
+    }
 
   /** st19's per-batch ingest step: exact-dedup the batch against the
     * accumulated KEY BANK (first-wins within the batch, then a
@@ -377,51 +404,21 @@ object EventStream {
   private val CmsW    = 512
   private val CmsTopK = 25
 
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("lang", StringType),
-    StructField("source", StringType), StructField("text", StringType),
-    StructField("n_chars", LongType)))
-
-  private val embeddingsSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
-  /** The table twin of [[runStream]]: a parquet file stream over one
-    * testdata table, drained to a memory sink, in a
-    * [[streamSession]] with `statePartitions` state stores. */
-  private def runTableStream(spark: SparkSession, dir: String,
-      table: String, schema: StructType, sinkName: String,
-      outputMode: String, statePartitions: Int)
-      (build: DataFrame => DataFrame): DataFrame = {
-    val ss = streamSession(spark, statePartitions)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve(s"$table.parquet"),
-        java.nio.file.Paths.get(s"$dir/$table.parquet"))
-      val stream = build(
-        ss.readStream.schema(schema).parquet(srcDir.toString))
-      q = stream.writeStream.outputMode(outputMode)
-        .format("memory").queryName(sinkName).start()
-      q.processAllAvailable()
-    } finally {
-      if (q != null) try q.stop() catch { case _: Exception => }
-      java.nio.file.Files.deleteIfExists(
-        srcDir.resolve(s"$table.parquet"))
-      java.nio.file.Files.deleteIfExists(srcDir)
-    }
-    ss.table(sinkName)
-  }
-
-  /** The documents twin of [[runStream]]: a parquet file stream over
-    * the documents table, drained to a memory sink. */
-  private def runDocStream(spark: SparkSession, dir: String,
-      sinkName: String, outputMode: String = "append")
-      (build: DataFrame => DataFrame): DataFrame =
-    runTableStream(spark, dir, "documents", docsSchema, sinkName,
-      outputMode, statePartitions = 8)(build)
+  /** The stream schemas of the testdata tables [[memoryDrain]] streams
+    * besides `events`. */
+  private val streamSchemas: Map[String, StructType] = Map(
+    "documents" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("lang", StringType),
+      StructField("source", StringType), StructField("text", StringType),
+      StructField("n_chars", LongType))),
+    "embeddings" -> StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("label", IntegerType))),
+    "lineitem" -> StructType(Seq(
+      StructField("l_orderkey", LongType),
+      StructField("l_returnflag", StringType),
+      StructField("l_quantity", DoubleType))))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // st01: the streaming twin of q11 — executed through a real
@@ -437,7 +434,8 @@ object EventStream {
     // corpus. The oracle shares TextAnalysis's scored CTE, so the
     // batch and streaming gates provably agree.
     "st08_stream_quality_gate" -> ((s, d) =>
-      runDocStream(s, d, "st_doc_gate") { df =>
+      memoryDrain(s, d, "documents", "st_doc_gate", "append",
+        statePartitions = 8, copies = 1) { df =>
         graft.operators.TextAnalysis.scored(df)
           .filter(col("quality_score") >= 0.3 &&
             col("predicted_lang").isin("en", "de", "es"))
@@ -466,7 +464,8 @@ object EventStream {
         .select(explode(array_distinct(
           wordNgrams(tokens(col("text")), ContamN))).as("g"))
         .distinct().collect().map(_.getString(0))
-      runDocStream(s, d, "st_decon") { df =>
+      memoryDrain(s, d, "documents", "st_decon", "append",
+        statePartitions = 8, copies = 1) { df =>
         val toksC = tokens(col("text"))
         // when(): docs below the gram width are clean BY DEFINITION and
         // must not evaluate wordNgrams (2-arg sequence would count down)
@@ -506,7 +505,8 @@ object EventStream {
         .distinct()
         .localCheckpoint() // feeds the bloom build AND the confirm join
       val bloom = BloomGate.build(hGrams, xxhash64(col("g")))
-      runDocStream(s, d, "st_bloom_decon", outputMode = "complete") { df =>
+      memoryDrain(s, d, "documents", "st_bloom_decon", "complete",
+        statePartitions = 8, copies = 1) { df =>
         BloomGate.register(df.sparkSession)
         val toksC = Funcs.tokens(col("text"))
         df.join(holdout.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -549,8 +549,8 @@ object EventStream {
         .select(lit(1).as("k"), col("vec_id").as("h_id"),
           col("embedding").as("he"), col("nrm").as("hn"))
         .localCheckpoint() // feeds the anti-join AND the scan join
-      runTableStream(s, d, "embeddings", embeddingsSchema,
-        "st_sem_decon", outputMode = "complete", statePartitions = 8) { df =>
+      memoryDrain(s, d, "embeddings", "st_sem_decon", "complete",
+        statePartitions = 8, copies = 1) { df =>
         df.join(hold.select(col("h_id").as("vec_id")),
             Seq("vec_id"), "left_anti")
           .select(col("vec_id"), col("embedding"),
@@ -594,8 +594,8 @@ object EventStream {
         .select(toks.columns.map(col) :+ posexplode(array(
           (0 until CmsD).map(r => bucket(r, col("token"))): _*)): _*)
         .withColumnsRenamed(Map("pos" -> "r", "col" -> "b"))
-      val cells = runDocStream(s, d, "st_cms", outputMode = "complete") {
-        df =>
+      val cells = memoryDrain(s, d, "documents", "st_cms", "complete",
+        statePartitions = 8, copies = 1) { df =>
           cellsOf(df.select(explode(tokens(col("text"))).as("token")))
             .groupBy("r", "b").agg(count(lit(1)).as("c"))
       }
@@ -628,8 +628,8 @@ object EventStream {
     // core AND its oracle verbatim, so the batch sketch and the
     // streaming view provably agree.
     "st09_stream_sketch" -> ((s, d) =>
-      runDocStream(s, d, "st_source_sketch", outputMode = "complete") {
-        df => graft.dedup.Dedup.sourceSketch(graft.dedup.Dedup.sigBank(df))
+      memoryDrain(s, d, "documents", "st_source_sketch", "complete",
+        statePartitions = 8, copies = 1) { df => graft.dedup.Dedup.sourceSketch(graft.dedup.Dedup.sigBank(df))
       }.orderBy("source", "j")),
 
     // st21: streaming QUANTILE registers — q45's histogram sketch as
@@ -654,8 +654,8 @@ object EventStream {
       // NaN bins): guard the divisor only, keep width for the edge
       // read so hi == lo yields est = lo exactly. Mirrored in SQL.
       val binW = math.max(width, java.lang.Double.MIN_NORMAL)
-      val regs = runStream(s, d, "st_quantile_regs", copies = 1,
-        outputMode = "complete") { df =>
+      val regs = memoryDrain(s, d, "events", "st_quantile_regs", "complete",
+        statePartitions = 8, copies = 1) { df =>
           df.withColumn("bin",
               least(floor((col("value") - lo) / binW), lit(255))
                 .cast("long"))
@@ -699,10 +699,6 @@ object EventStream {
       val rhoCase = "CASE " + (1 to 32).map(k =>
         s"WHEN w >= ${1L << (32 - k)} THEN $k").mkString(" ") +
         " ELSE 33 END"
-      val liSchema = StructType(Seq(
-        StructField("l_orderkey", LongType),
-        StructField("l_returnflag", StringType),
-        StructField("l_quantity", DoubleType)))
       def unpivot(df: DataFrame): DataFrame = df.select(explode(array(
           struct(lit("l_orderkey").as("column_name"),
             lpad(col("l_orderkey").cast("string"), 20, "0").as("repr")),
@@ -728,8 +724,8 @@ object EventStream {
       // spread a few hundred keys over eight stores, each with its own
       // task per microbatch.
       val buf = graft.functions.Timing.t("st23.stream")(
-        runTableStream(s, d, "lineitem", liSchema,
-        "st_stats_buf", "complete", statePartitions = 1) { df =>
+        memoryDrain(s, d, "lineitem", "st_stats_buf", "complete",
+          statePartitions = 1, copies = 1) { df =>
         unpivot(df)
           .select(col("column_name"), col("repr"),
             md5(col("repr")).as("hx"))
@@ -786,8 +782,8 @@ object EventStream {
     // seen); at scale this is the at-least-once-ingest → exactly-once
     // -downstream repair step.
     "st02_stream_dedup" -> ((s, d) =>
-      runStream(s, d, "st_events_dedup", copies = 2, outputMode = "append") {
-        df =>
+      memoryDrain(s, d, "events", "st_events_dedup", "append",
+        statePartitions = 8, copies = 2) { df =>
           df.withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), col("event_type"), col("value"))
@@ -800,8 +796,8 @@ object EventStream {
     // stream-join failure mode). Self-derived from one source stream;
     // the oracle is the plain batch inequality join.
     "st04_stream_stream_join" -> ((s, d) =>
-      runStream(s, d, "st_events_ssjoin", copies = 1, outputMode = "append") {
-        df =>
+      memoryDrain(s, d, "events", "st_events_ssjoin", "append",
+        statePartitions = 8, copies = 1) { df =>
           val clicks = df.filter(col("event_type") === "click")
             .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
               col("event_id").as("click_event_id"))
@@ -827,8 +823,8 @@ object EventStream {
     // each user's last session — checking both the session math and
     // the open-state semantics. State is one tiny struct per user.
     "st05_stream_sessionize" -> ((s, d) =>
-      runStream(s, d, "st_events_sessionize", copies = 1,
-        outputMode = "append") { df =>
+      memoryDrain(s, d, "events", "st_events_sessionize", "append",
+        statePartitions = 8, copies = 1) { df =>
         import df.sparkSession.implicits._
         graft.operators.Sessionize.sessionizeStream(
           df.select(col("user_id"), col("event_id"),
@@ -843,8 +839,8 @@ object EventStream {
     // the batch oracle IS q33's, so the lag window and the state-store
     // chain provably implement the same rule.
     "st13_stream_debounce" -> ((s, d) =>
-      runStream(s, d, "st_events_debounce", copies = 1,
-        outputMode = "append") { df =>
+      memoryDrain(s, d, "events", "st_events_debounce", "append",
+        statePartitions = 8, copies = 1) { df =>
         import df.sparkSession.implicits._
         graft.operators.Sessionize.debounceStream(
           df.select(col("user_id"), col("event_type"), col("event_id"),
@@ -864,8 +860,8 @@ object EventStream {
     // open-state semantics pinned by one hash.
     "st16_stream_paths" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val sink = runStream(s, d, "st_events_paths", copies = 1,
-        outputMode = "append") { df =>
+      val sink = memoryDrain(s, d, "events", "st_events_paths", "append",
+        statePartitions = 8, copies = 1) { df =>
         import df.sparkSession.implicits._
         graft.operators.Sessionize.pathStream(
           df.select(col("user_id"), col("event_type"), col("event_id"),
@@ -889,8 +885,8 @@ object EventStream {
     // form of q37's window (q37 aggregates it to channel counts), so
     // the state rule is pinned row-by-row, not just in aggregate.
     "st15_stream_attribution" -> ((s, d) =>
-      runStream(s, d, "st_events_attribution", copies = 1,
-        outputMode = "append") { df =>
+      memoryDrain(s, d, "events", "st_events_attribution", "append",
+        statePartitions = 8, copies = 1) { df =>
         import df.sparkSession.implicits._
         graft.operators.Sessionize.lastTouchStream(
           df.select(col("user_id"), col("event_type"), col("event_id"),
@@ -905,8 +901,8 @@ object EventStream {
     // st13/q33: the batch window and the state-store counter answer
     // to ONE oracle, so both engines provably enforce the same quota.
     "st14_stream_rate_limit" -> ((s, d) =>
-      runStream(s, d, "st_events_rate_limit", copies = 1,
-        outputMode = "append") { df =>
+      memoryDrain(s, d, "events", "st_events_rate_limit", "append",
+        statePartitions = 8, copies = 1) { df =>
         import df.sparkSession.implicits._
         val hourUs = graft.operators.Relational.HourUs
         graft.operators.Sessionize.rateLimitStream(
@@ -931,8 +927,8 @@ object EventStream {
     // needs; the oracle duplicates each event into its two
     // hourly-aligned window starts.
     "st06_stream_sliding" -> ((s, d) =>
-      runStream(s, d, "st_events_sliding", copies = 1,
-        outputMode = "complete") { df =>
+      memoryDrain(s, d, "events", "st_events_sliding", "complete",
+        statePartitions = 8, copies = 1) { df =>
         df.withWatermark("ts", "2 hours")
           .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -952,8 +948,8 @@ object EventStream {
     // partial argmax the batch plan uses. The oracle IS q23's: the
     // stream must converge to exactly the batch answer.
     "st07_stream_latest" -> ((s, d) =>
-      runStream(s, d, "st_events_latest", copies = 1,
-        outputMode = "complete") { df =>
+      memoryDrain(s, d, "events", "st_events_latest", "complete",
+        statePartitions = 8, copies = 1) { df =>
         df.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"), col("value"))
           .groupBy("user_id")
@@ -1002,19 +998,8 @@ object EventStream {
       raw.repartition(3).write.parquet(s"$root/src")
       val out = s"$root/out"
       fs.mkdirs(new Path(out))
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            commitBatch(ss, out, df, id); ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
+      drainBatches(ss, s"$root/src", raw.schema, s"$root/ckpt") {
+        (df, id) => commitBatch(ss, out, df, id)
       }
       val ids = committedIds(ss, out)
       require(ids.size >= 2, s"expected multiple microbatches, got $ids")
@@ -1052,7 +1037,7 @@ object EventStream {
     // mode("overwrite") the same directory it is reading, crashing
     // the stream instead of converging. At-least-once delivery ×
     // idempotent merge = exactly-once state, st12's law at the row
-    // level (replay skip spec'd in Round10OpsSpec).
+    // level (replay skip spec'd in EventStreamSpec).
     //
     // Scale: per batch ONE keyed merge exchange over snapshot∪batch
     // (copy-on-write; production prunes to matched files first, io19)
@@ -1084,23 +1069,8 @@ object EventStream {
       Seq(b0, b1, b2).foreach(
         _.coalesce(1).write.mode("append").parquet(s"$root/src"))
       val out = s"$root/tbl"
-      var batches = 0
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(b0.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            upsertDocBatch(ss, out, df, id)
-            batches += 1
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
-      }
+      val batches = drainBatches(ss, s"$root/src", b0.schema,
+        s"$root/ckpt")((df, id) => upsertDocBatch(ss, out, df, id))
       require(batches >= 2, s"expected multiple merge batches, got $batches")
       val snap = s.read.parquet(
         s"$out/" + graft.io.Commit.readMarker(s, s"$out/_SNAPSHOT"))
@@ -1188,23 +1158,8 @@ object EventStream {
           .withColumn("tok_count", tok))
       Seq(w1, w2).foreach(
         _.coalesce(1).write.mode("append").parquet(s"$root/src"))
-      var batches = 0
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(w1.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            upsertEvolveBatch(ss, out, df, id)
-            batches += 1
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
-      }
+      val batches = drainBatches(ss, s"$root/src", w1.schema,
+        s"$root/ckpt")((df, id) => upsertEvolveBatch(ss, out, df, id))
       require(batches >= 2, s"expected multiple evolve batches, got $batches")
       val snap = s.read.parquet(
         s"$out/" + graft.io.Commit.readMarker(s, s"$out/_SNAPSHOT"))
@@ -1272,23 +1227,8 @@ object EventStream {
             col("lang"), col("source"), col("n_chars")), 1L))
       Seq(w1, w2).foreach(
         _.coalesce(1).write.mode("append").parquet(s"$root/src"))
-      var batches = 0
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(w1.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            upsertWidenRenameBatch(ss, out, df, id)
-            batches += 1
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
-      }
+      val batches = drainBatches(ss, s"$root/src", w1.schema,
+        s"$root/ckpt")((df, id) => upsertWidenRenameBatch(ss, out, df, id))
       require(batches >= 2,
         s"expected multiple widen+rename batches, got $batches")
       val snap = s.read.parquet(
@@ -1363,23 +1303,8 @@ object EventStream {
           w.filter(col("vec_id") >= b0 && col("vec_id") < b1),
           w.filter(col("vec_id") >= b1))
         .foreach(_.coalesce(1).write.mode("append").parquet(s"$tmp/src"))
-      var batches = 0
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(w.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src")
-          .writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            sim.appendIndexWave(ss, d, root, df, id)
-            batches += 1
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
-      }
+      val batches = drainBatches(ss, s"$tmp/src", w.schema,
+        s"$tmp/ckpt")((df, id) => sim.appendIndexWave(ss, d, root, df, id))
       require(batches >= 3,
         s"expected three post-swap waves, got $batches")
       // crash-recovery replay of the last landed wave, id from the
@@ -1485,54 +1410,41 @@ object EventStream {
           require(fs.rename(part, dst), s"staging rename of wave $i failed")
           fs.setTimes(dst, 1000L * (i + 1), -1L)
         }
-      var batches = 0
       var quietOnBase = false
       var triggeredAt = -1L
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(drifted.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src")
-          .writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            sim.appendIndexWave(ss, d, root, df, id)
-            batches += 1
-            // the MONITOR — INCREMENTAL (round-15, closing the
-            // round-14 verdict's one scale-weak shape): after every
-            // landed wave, fold THAT WAVE's page-sized per-cell
-            // stats into v1's merged artifact and derive ss27's
-            // verdict from the artifact alone (ss40's oracle pins
-            // merged ≡ from-scratch hash-exactly) — per-batch cost
-            // is wave-sized + a cells-sized artifact read, never an
-            // index rescan. The first flagged cell dispatches the
-            // retrain verb. Post-swap the monitor stands down — v2
-            // serves and the verdict's baseline is a new regime.
-            if (graft.io.Commit.readMarker(ss, s"$root/_VERSION")
-                == "v1") {
-              sim.foldWaveDriftStats(ss, s"$root/v1", cutoff, id)
-              val flagged = !sim.incrDriftReadout(ss, s"$root/v1")
-                .filter(col("fill_skew") || col("err_drift")).isEmpty
-              if (flagged) {
-                require(sim.retrainIfDrifted(ss, d, root),
-                  "the monitor's verdict fired but the retrain verb " +
-                    "did not commit")
-                triggeredAt = id
-              } else if (!df.isEmpty &&
-                  df.agg(max("vec_id")).head().getLong(0) < cutoff) {
-                // the quiet readout is only evidence when the batch
-                // that produced it was the UNDRIFTED BASE wave (all
-                // ids below the cutoff) — a quiet readout over a
-                // delta-only index would be vacuous (n_base = 0
-                // makes err_drift trivially false; round-14 advisor)
-                quietOnBase = true
-              }
-            }
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
+      val batches = drainBatches(ss, s"$tmp/src", drifted.schema,
+          s"$tmp/ckpt") { (df, id) =>
+        sim.appendIndexWave(ss, d, root, df, id)
+        // the MONITOR — INCREMENTAL (round-15, closing the
+        // round-14 verdict's one scale-weak shape): after every
+        // landed wave, fold THAT WAVE's page-sized per-cell
+        // stats into v1's merged artifact and derive ss27's
+        // verdict from the artifact alone (ss40's oracle pins
+        // merged ≡ from-scratch hash-exactly) — per-batch cost
+        // is wave-sized + a cells-sized artifact read, never an
+        // index rescan. The first flagged cell dispatches the
+        // retrain verb. Post-swap the monitor stands down — v2
+        // serves and the verdict's baseline is a new regime.
+        if (graft.io.Commit.readMarker(ss, s"$root/_VERSION")
+            == "v1") {
+          sim.foldWaveDriftStats(ss, s"$root/v1", cutoff, id)
+          val flagged = !sim.incrDriftReadout(ss, s"$root/v1")
+            .filter(col("fill_skew") || col("err_drift")).isEmpty
+          if (flagged) {
+            require(sim.retrainIfDrifted(ss, d, root),
+              "the monitor's verdict fired but the retrain verb " +
+                "did not commit")
+            triggeredAt = id
+          } else if (!df.isEmpty &&
+              df.agg(max("vec_id")).head().getLong(0) < cutoff) {
+            // the quiet readout is only evidence when the batch
+            // that produced it was the UNDRIFTED BASE wave (all
+            // ids below the cutoff) — a quiet readout over a
+            // delta-only index would be vacuous (n_base = 0
+            // makes err_drift trivially false; round-14 advisor)
+            quietOnBase = true
+          }
+        }
       }
       require(batches >= 4,
         s"expected four microbatch waves, got $batches")
@@ -1585,23 +1497,8 @@ object EventStream {
           emb.filter(col("vec_id") >= b1))
         .foreach(_.coalesce(1).write.mode("append").parquet(s"$root/src"))
       val idxRoot = s"$root/idx"
-      var batches = 0
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            sim.appendIndexWave(ss, d, idxRoot, df, id)
-            batches += 1
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
-      }
+      val batches = drainBatches(ss, s"$root/src", emb.schema,
+        s"$root/ckpt")((df, id) => sim.appendIndexWave(ss, d, idxRoot, df, id))
       require(batches >= 3,
         s"expected three index-append waves, got $batches")
       // crash-recovery replay of the last wave: the marker proves the
@@ -1683,29 +1580,18 @@ object EventStream {
         !Seq(0L, 1L, 2L).forall(w => sim.waveApplied(preLog, w))
       var maxEntries = 0
       var compactions = 0
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(delIds.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src")
-          .writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            sim.appendTombstoneWave(ss, root, df, id)
-            // bounded-metadata maintenance IN the sink: compact the
-            // accumulated list once it exceeds the policy threshold
-            val entries = graft.io.Commit
-              .readMarker(ss, s"$root/_TOMB").split(",").length
-            maxEntries = math.max(maxEntries, entries)
-            if (entries > sim.TombMaxEntries) {
-              sim.compactTombstones(ss, root)
-              compactions += 1
-            }
-            ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
+      drainBatches(ss, s"$tmp/src", delIds.schema, s"$tmp/ckpt") {
+        (df, id) =>
+          sim.appendTombstoneWave(ss, root, df, id)
+          // bounded-metadata maintenance IN the sink: compact the
+          // accumulated list once it exceeds the policy threshold
+          val entries = graft.io.Commit
+            .readMarker(ss, s"$root/_TOMB").split(",").length
+          maxEntries = math.max(maxEntries, entries)
+          if (entries > sim.TombMaxEntries) {
+            sim.compactTombstones(ss, root)
+            compactions += 1
+          }
       }
       // the three waves landed exactly once — read off their own log
       // (the marker's file names are gone: compaction absorbed them)
@@ -1757,19 +1643,8 @@ object EventStream {
       Seq(b0, b1, b2).foreach(
         _.drop("ck").coalesce(1).write.mode("append").parquet(s"$root/src"))
       val out = s"$root/out"
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            ingestCurateBatch(ss, root, out, df, id); ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
+      drainBatches(ss, s"$root/src", docs.schema, s"$root/ckpt") {
+        (df, id) => ingestCurateBatch(ss, root, out, df, id)
       }
       val ids = committedIds(ss, out)
       require(ids.size >= 2, s"expected multiple ingest batches, got $ids")
@@ -1829,21 +1704,10 @@ object EventStream {
           60000L * (k + 1), -1)
       }
       val out = s"$root/out"
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = ss.readStream.schema(StructType(Seq(
-            StructField("event_id", LongType),
-            StructField("ts_us", LongType))))
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch((df: DataFrame, id: Long) => {
-            lateAuditBatch(ss, root, out, df, id); ()
-          })
-          .start()
-        q.processAllAvailable()
-      } finally {
-        if (q != null) try q.stop() catch { case _: Exception => }
+      drainBatches(ss, s"$root/src", StructType(Seq(
+          StructField("event_id", LongType),
+          StructField("ts_us", LongType))), s"$root/ckpt") {
+        (df, id) => lateAuditBatch(ss, root, out, df, id)
       }
       readCommitted(ss, out, lateAuditSchema).orderBy("batch_id")
     }),
@@ -1853,8 +1717,8 @@ object EventStream {
     // every micro-batch; the stream side never shuffles. Joining to
     // `customer` on user_id ⊂ custkey enriches events with segment.
     "st03_stream_static_join" -> ((s, d) =>
-      runStream(s, d, "st_events_enrich", copies = 1, outputMode = "append") {
-        df =>
+      memoryDrain(s, d, "events", "st_events_enrich", "append",
+        statePartitions = 8, copies = 1) { df =>
           val dim = broadcast(graft.Tables.customer(s, d)
             .select(col("c_custkey"), col("c_mktsegment")))
           df.join(dim, df("user_id") === dim("c_custkey"))

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Property tests for the round-10 work: the incremental-curation
   * equivalence theorem (in-suite halves the DuckDB hash gate can't
-  * state), st18's replay-safe publish, the bloom sizing law, and
-  * q19b's register algebra.
+  * state), the bloom sizing law, and q19b's register algebra.
+  * (st18's replay-safe publish is in EventStreamSpec.)
   */
 class Round10OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -50,31 +50,6 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(graft.io.Commit.readMarker(spark, s"$root2/_SNAPSHOT") == "snap2")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root1))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root2))
-  }
-
-  test("st18's upsertDocBatch skips a replayed batch whose marker " +
-    "already points at it (recovery replay is a no-op, not a crash)") {
-    import graft.streaming.EventStream
-    val out = TestFiles.tempDir("graft_upsert_replay").toString
-    val b0 = Tables.documents(spark, d)
-      .select("doc_id", "text", "lang", "source")
-      .withColumn("version", lit(1L)).limit(50)
-    assert(EventStream.upsertDocBatch(spark, out, b0, 0L))
-    val afterFirst = spark.read.parquet(s"$out/snap0").collect().toSet
-    // the at-least-once replay: same batch id re-delivered after the
-    // marker swap — without the guard this read+overwrite of snap0
-    // throws; with it, the call reports a skip and state is untouched
-    assert(!EventStream.upsertDocBatch(spark, out, b0, 0L))
-    assert(spark.read.parquet(s"$out/snap0").collect().toSet == afterFirst)
-    // a NEW batch id still merges normally on top
-    val b1 = b0.withColumn("text", concat(col("text"), lit(" [rev2]")))
-      .withColumn("version", lit(2L)).limit(10)
-    assert(EventStream.upsertDocBatch(spark, out, b1, 1L))
-    assert(graft.io.Commit.readMarker(spark, s"$out/_SNAPSHOT") == "snap1")
-    val merged = spark.read.parquet(s"$out/snap1")
-    assert(merged.filter(col("version") === 2L).count() == 10)
-    assert(merged.count() == 50)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("st19's ingestCurateBatch: accepted corpus is invariant to " +

@@ -234,35 +234,6 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
-  test("st24 evolve-merge batch evolves the snapshot schema, " +
-    "NULL-backfills base survivors, and is replay-safe") {
-    import org.apache.spark.sql.functions._
-    val d = "/root/testdata/sf0.001"
-    val out = TestFiles.tempDir("graft_st24_replay").toString
-    val docs0 = Tables.documents(spark, d)
-      .select("doc_id", "text", "lang", "source")
-    docs0.withColumn("version", lit(1L))
-      .write.mode("overwrite").parquet(s"$out/snapbase")
-    graft.io.Commit.writeMarker(spark, s"$out/_SNAPSHOT", "snapbase")
-    val wide = docs0.filter(col("doc_id") % 7 === 0)
-      .withColumn("text", concat(col("text"), lit(" [rev2]")))
-      .withColumn("version", lit(2L))
-      .withColumn("tok_count",
-        size(graft.functions.Funcs.tokens(col("text"))).cast("long"))
-    assert(graft.streaming.EventStream.upsertEvolveBatch(
-      spark, out, wide, 0L))
-    val snap = spark.read.parquet(
-      s"$out/" + graft.io.Commit.readMarker(spark, s"$out/_SNAPSHOT"))
-    assert(snap.columns.contains("tok_count"))
-    val nBase = snap.filter(col("tok_count").isNull).count()
-    val nWide = snap.filter(col("tok_count").isNotNull).count()
-    assert(nWide == wide.count())
-    assert(nBase == docs0.count() - nWide)
-    // redelivery of the committed batch: marker guard skips it
-    assert(!graft.streaming.EventStream.upsertEvolveBatch(
-      spark, out, wide, 0L))
-  }
-
   test("dd24 segmentation is offset-invariant after re-sync: the " +
     "shared span chunks identically at both shifts from the first " +
     "common kept boundary, reached within one clamp period") {

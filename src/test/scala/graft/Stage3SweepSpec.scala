@@ -225,7 +225,8 @@ class Stage3SweepSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     samples.count()
     val (_, jobs) = JobCount.of(spark)(
       VirusPipeline.classificationReport(spark, samples, Seed))
-    // 19 fits and their scoring, over splits of one cached parent
-    assert(jobs <= 353, s"classificationReport ran $jobs jobs")
+    // 19 fits and their scoring, over splits of one cached parent that
+    // the report fills before the concurrent fits start
+    assert(jobs == 352, s"classificationReport ran $jobs jobs")
   }
 }
